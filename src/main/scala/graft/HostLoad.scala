@@ -1,8 +1,8 @@
 package graft
 
-/** Neighbor-CPU metering for the benchmark's external-load defense
-  * (VERDICT r13 #1): how many CPU cores did processes OUTSIDE this JVM
-  * burn during a measurement window?
+/** Host-load metering recorded with every benchmark run, so a noisy run
+  * is visible: how many CPU cores did processes OUTSIDE this JVM burn
+  * during a measurement window, and how much did the hypervisor steal?
   *
   * Loadavg (the obvious signal, and what the round-13 postmortem had to
   * lean on) is a 1-minute EWMA — it lags a 40 s window badly and mixes
@@ -11,7 +11,7 @@ package graft
   * except our own, twice, and diff. Pids present in only one sample are
   * dropped (a vanished pid's total is unknowable, a fresh pid has no
   * baseline) — short-lived neighbors undercount slightly, which biases
-  * toward "clean", the conservative direction for flagging.
+  * toward "clean".
   */
 object HostLoad {
 
@@ -64,71 +64,11 @@ object HostLoad {
     jiffies / (elapsedSec * UserHz)
   }
 
-  /** System-wide IO pressure counters — the SECOND contamination mode.
-    * Neighbor-CPU metering missed a real collapse (round 14: a window
-    * read 1.08 req/s with external CPU at 0.07 cores, yet loadavg ~10
-    * against ~2.7 cores of own-JVM CPU — i.e. ~7 threads parked in
-    * uninterruptible IO wait, the signature of device throttling /
-    * writeback storms rather than CPU contention). Direct counters:
-    * the aggregate `iowait` jiffies from `/proc/stat` and the summed
-    * `io_ticks` (field 13, ms the device was busy) of physical block
-    * devices from `/proc/diskstats`.
-    */
-  final case class IoSample(iowaitJiffies: Long, ioTicksMs: Long)
-
-  def ioSample(): IoSample = IoSample(
-    iowaitJiffies =
-      try parseStatIowait(java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat")))
-      catch { case _: Throwable => 0L },
-    ioTicksMs =
-      try parseDiskstatsIoTicks(java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/diskstats")))
-      catch { case _: Throwable => -1L }) // unreadable = unavailable, not "0% busy"
-
-  /** Aggregate iowait jiffies (5th value on the summary `cpu` line). */
-  private[graft] def parseStatIowait(stat: String): Long =
-    stat.linesIterator.find(_.startsWith("cpu ")).flatMap { line =>
-      val f = line.trim.split("\\s+")
-      if (f.length > 5) f(5).toLongOption else None
-    }.getOrElse(0L)
-
-  /** Whole-device name shapes, partitions excluded so they are not
-    * double-counted against their parent: plain disks (vda/sdb/xvdc),
-    * digit-suffixed families (nvme0n1, mmcblk0, rbd0, md0, dm-0), and
-    * the container-host families loop/zram (ADVICE r14: the previous
-    * 'contains p' partition test could never match loop — the prefix
-    * itself contains a p — so loop-backed hosts read disk-busy 0 and IO
-    * contamination passed as clean).
-    */
-  private val wholeDeviceRe =
-    "^(?:(?:vd|sd|xvd)[a-z]+|nvme\\d+n\\d+|mmcblk\\d+|rbd\\d+|md\\d+|dm-\\d+|loop\\d+|zram\\d+)$".r
-
-  /** Summed io_ticks (ms in flight) of whole block devices, or -1 when
-    * NO whole device matched (unknown device naming: the meter is
-    * UNAVAILABLE and must not read as "0% busy = clean" — the caller
-    * falls back to iowait-only IO flagging). Stacked devices (dm- over
-    * sd) CAN both tick for one IO; that over-counts busy time, which
-    * biases toward flagging a window suspect — the safe direction for a
-    * grading defense.
-    */
-  private[graft] def parseDiskstatsIoTicks(diskstats: String): Long = {
-    var matched = false
-    var sum = 0L
-    diskstats.linesIterator.foreach { line =>
-      val f = line.trim.split("\\s+")
-      if (f.length >= 13 && wholeDeviceRe.matches(f(2)))
-        f(12).toLongOption.foreach { v => matched = true; sum += v }
-    }
-    if (matched) sum else -1L
-  }
-
   /** Cumulative hypervisor steal jiffies (field 8 after the "cpu"
     * label in /proc/stat: user nice system idle iowait irq softirq
-    * STEAL); -1 when unavailable. Steal is the FIFTH contamination
-    * mode (r20: windows declined 13.5 → 6.8 req/s and even the pure-
-    * arithmetic canary dropped 17% while external CPU, iowait, disk,
-    * run-delay and PSI all read clean — the hypervisor was taking ~2
-    * cores. Run-delay cannot see it: a stolen vCPU's task is "running"
-    * from the guest scheduler's view, the vCPU itself is preempted).
+    * STEAL); -1 when unavailable. Steal is the contamination neighbor
+    * metering cannot see (r20: windows declined 13.5 → 6.8 req/s while
+    * external CPU read clean — the hypervisor was taking ~2 cores).
     */
   def stealJiffies(): Long =
     try {
@@ -144,199 +84,4 @@ object HostLoad {
   def stealCores(before: Long, after: Long, elapsedSec: Double): Double =
     if (before < 0 || after < 0 || elapsedSec <= 0) -1.0
     else math.max(0L, after - before) / (elapsedSec * UserHz)
-
-  /** Average cores' worth of threads parked in IO wait over the window. */
-  def ioWaitCores(before: IoSample, after: IoSample, elapsedSec: Double): Double =
-    if (elapsedSec <= 0) 0.0
-    else math.max(0L, after.iowaitJiffies - before.iowaitJiffies) / (elapsedSec * UserHz)
-
-  /** Fraction of the window the block devices were busy (can exceed 1.0
-    * with multiple devices); -1 when the device meter is unavailable
-    * (no recognizable whole device — callers fall back to iowait-only).
-    */
-  def diskBusyFrac(before: IoSample, after: IoSample, elapsedSec: Double): Double =
-    if (before.ioTicksMs < 0 || after.ioTicksMs < 0) -1.0
-    else if (elapsedSec <= 0) 0.0
-    else math.max(0L, after.ioTicksMs - before.ioTicksMs) / (elapsedSec * 1000.0)
-
-  /** Own-JVM self metering — the THIRD contamination mode (VERDICT r14
-    * #1: a window collapsed to 3.34 req/s while neighbor CPU, iowait,
-    * and disk busy all read clean — whatever starved the JVM lived
-    * outside the pid namespace: neighbor VMs, hypervisor steal, cgroup
-    * throttling). Two in-namespace meters that see it regardless of the
-    * cause:
-    *  - achieved cores: this process's utime+stime delta / elapsed — a
-    *    saturated closed-loop bench whose achieved cores collapse below
-    *    the round's best was starved, full stop;
-    *  - run delay: /proc/self/task/<tid>/schedstat field 2, time spent
-    *    runnable-but-NOT-running, summed over live threads — the
-    *    steal/throttle signature (the thread wanted the CPU and the
-    *    host gave it to someone else).
-    */
-  final case class SelfSample(cpuSec: Double, runDelayNs: Long)
-
-  def selfSample(): SelfSample = {
-    val cpu =
-      try parseStatJiffies(java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/self/stat")))
-        .map(_ / UserHz).getOrElse(-1.0)
-      catch { case _: Throwable => -1.0 }
-    val rd =
-      try {
-        Option(new java.io.File("/proc/self/task").listFiles()).getOrElse(Array.empty)
-          .map { t =>
-            try {
-              val f = java.nio.file.Files.readString(t.toPath.resolve("schedstat")).trim.split("\\s+")
-              if (f.length >= 2) f(1).toLong else 0L
-            } catch { case _: Throwable => 0L } // thread exited mid-scan
-          }.sum
-      } catch { case _: Throwable => -1L }
-    SelfSample(cpu, rd)
-  }
-
-  /** Average cores this JVM actually burned over the window (-1 when
-    * the meter is unavailable).
-    */
-  def achievedCores(before: SelfSample, after: SelfSample, elapsedSec: Double): Double =
-    if (before.cpuSec < 0 || after.cpuSec < 0 || elapsedSec <= 0) -1.0
-    else math.max(0.0, after.cpuSec - before.cpuSec) / elapsedSec
-
-  /** Average cores' worth of this JVM's threads held runnable-but-not-
-    * running over the window (-1 when unavailable). Threads that exit
-    * mid-window take their accumulated delay with them, so the delta is
-    * clamped at zero — an undercount, which only ever UNDER-flags.
-    */
-  def runDelayCores(before: SelfSample, after: SelfSample, elapsedSec: Double): Double =
-    if (before.runDelayNs < 0 || after.runDelayNs < 0 || elapsedSec <= 0) -1.0
-    else math.max(0L, after.runDelayNs - before.runDelayNs) / (elapsedSec * 1e9)
-
-  /** Kernel pressure-stall information (PSI, /proc/pressure/…) — the
-    * FOURTH contamination lens (VERDICT r16 #1: driver windows burned
-    * 45–68% of wall clock in GC pause on a canary-comparable host; the
-    * artifact could not say whether the JVM's heap was thrashing or the
-    * HOST was memory-starved, lengthening every pause). PSI answers the
-    * host half directly: `memory full` is wall time during which EVERY
-    * runnable task was stalled on memory reclaim — a nonzero delta over
-    * a window is kernel-attested memory starvation, independent of any
-    * JVM meter. `some` totals for memory/io/cpu give the softer
-    * at-least-one-task-stalled view. Totals are cumulative µs; -1 per
-    * field when the file is absent (pre-4.20 kernels, PSI off).
-    */
-  final case class PsiSample(memSomeUs: Long, memFullUs: Long,
-      ioSomeUs: Long, ioFullUs: Long, cpuSomeUs: Long)
-
-  def psiSample(): PsiSample = {
-    def read(kind: String): (Long, Long) =
-      try parsePsi(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"/proc/pressure/$kind")))
-      catch { case _: Throwable => (-1L, -1L) }
-    val (ms, mf) = read("memory"); val (is, ifl) = read("io")
-    val (cs, _) = read("cpu")
-    PsiSample(ms, mf, is, ifl, cs)
-  }
-
-  /** (some.total, full.total) µs out of one PSI file; -1 for a missing
-    * line (the root cpu file has no `full` line on some kernels).
-    */
-  private[graft] def parsePsi(text: String): (Long, Long) = {
-    def total(prefix: String): Long =
-      text.linesIterator.find(_.startsWith(prefix)).flatMap { line =>
-        line.split("\\s+").find(_.startsWith("total="))
-          .flatMap(_.stripPrefix("total=").toLongOption)
-      }.getOrElse(-1L)
-    (total("some"), total("full"))
-  }
-
-  /** Stall ms between two PSI samples (-1 when either side unavailable). */
-  def psiStallMs(beforeUs: Long, afterUs: Long): Long =
-    if (beforeUs < 0 || afterUs < 0) -1L
-    else math.max(0L, afterUs - beforeUs) / 1000L
-
-  /** Cgroup CPU-throttling and memory-limit counters — the host-side
-    * twin of the PSI lens, scoped to THIS container rather than the
-    * whole machine. Handles both hierarchies: cgroup v2 (unified,
-    * `/sys/fs/cgroup<path>/cpu.stat` `throttled_usec`) and v1
-    * (`/sys/fs/cgroup/cpu<path>/cpu.stat` `throttled_time` ns;
-    * `/sys/fs/cgroup/memory<path>/memory.{limit_in_bytes,failcnt}`).
-    * A nonzero throttled delta over a window means the hypervisor/
-    * cgroup denied this container CPU it wanted — invisible to every
-    * in-namespace meter except run-delay, and now named as itself.
-    */
-  final case class CgroupSample(cpuThrottledUs: Long, memFailcnt: Long,
-      memUsageBytes: Long)
-
-  private def cgroupPaths(): Map[String, java.nio.file.Path] = {
-    val root = java.nio.file.Paths.get("/sys/fs/cgroup")
-    try {
-      val lines = java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/self/cgroup")).linesIterator.toSeq
-      val out = scala.collection.mutable.Map[String, java.nio.file.Path]()
-      lines.foreach { l =>
-        l.split(":", 3) match {
-          case Array(_, "", p) => // v2 unified
-            out("v2") = root.resolve(p.stripPrefix("/"))
-            if (!java.nio.file.Files.isDirectory(out("v2")))
-              out("v2") = root // namespaced container: files live at the mount root
-          case Array(_, ctrls, p) =>
-            ctrls.split(",").foreach { c =>
-              val full = root.resolve(c).resolve(p.stripPrefix("/"))
-              out(c) = if (java.nio.file.Files.isDirectory(full)) full else root.resolve(c)
-            }
-          case _ =>
-        }
-      }
-      out.toMap
-    } catch { case _: Throwable => Map.empty }
-  }
-
-  private def readKv(path: java.nio.file.Path, key: String): Long =
-    try java.nio.file.Files.readString(path).linesIterator
-      .find(_.startsWith(key + " ")).flatMap(_.split("\\s+")(1).toLongOption)
-      .getOrElse(-1L)
-    catch { case _: Throwable => -1L }
-
-  private def readLong(path: java.nio.file.Path): Long =
-    try java.nio.file.Files.readString(path).trim.toLongOption.getOrElse(-1L)
-    catch { case _: Throwable => -1L }
-
-  def cgroupSample(): CgroupSample = {
-    val paths = cgroupPaths()
-    // v2 first (throttled_usec), then v1 (throttled_time, ns -> µs)
-    val thrUs = paths.get("v2").map(p => readKv(p.resolve("cpu.stat"), "throttled_usec"))
-      .filter(_ >= 0)
-      .orElse(paths.get("cpu").map(p => readKv(p.resolve("cpu.stat"), "throttled_time"))
-        .filter(_ >= 0).map(_ / 1000L))
-      .getOrElse(-1L)
-    val failcnt = paths.get("memory").map(p => readLong(p.resolve("memory.failcnt")))
-      .filter(_ >= 0)
-      .orElse(paths.get("v2").map(p => readKv(p.resolve("memory.events"), "max")))
-      .getOrElse(-1L)
-    val usage = paths.get("memory").map(p => readLong(p.resolve("memory.usage_in_bytes")))
-      .filter(_ >= 0)
-      .orElse(paths.get("v2").map(p => readLong(p.resolve("memory.current"))))
-      .getOrElse(-1L)
-    CgroupSample(thrUs, failcnt, usage)
-  }
-
-  /** This container's memory limit in bytes; -1 when unlimited or
-    * unavailable (v1 reports "unlimited" as ~Long.MaxValue rounded to
-    * the page size — anything over 2^60 reads as no limit).
-    */
-  def cgroupMemLimitBytes(): Long = {
-    val paths = cgroupPaths()
-    val v = paths.get("memory").map(p => readLong(p.resolve("memory.limit_in_bytes")))
-      .filter(_ >= 0)
-      .orElse(paths.get("v2").flatMap { p =>
-        try {
-          val s = java.nio.file.Files.readString(p.resolve("memory.max")).trim
-          if (s == "max") Some(-1L) else s.toLongOption
-        } catch { case _: Throwable => None }
-      })
-      .getOrElse(-1L)
-    if (v > (1L << 60)) -1L else v
-  }
-
-  /** Cgroup CPU throttled ms between two samples (-1 unavailable). */
-  def cgroupThrottledMs(before: CgroupSample, after: CgroupSample): Long =
-    if (before.cpuThrottledUs < 0 || after.cpuThrottledUs < 0) -1L
-    else math.max(0L, after.cpuThrottledUs - before.cpuThrottledUs) / 1000L
 }

@@ -443,8 +443,7 @@ final class Session(val id: String, val spark: SparkSession,
     fast.foreach { df => if (p.ephemeral) closePrepared(p.handle); return df }
     val single = SqlShim.statementCount(p.sql) == 1
     // generic prepared QUERY: serve from the handle's cached analyzed
-    // plan when valid (the r19 gap: only the bench pinned re-executions;
-    // the served path re-ran parse+analyze+optimize+AQE per execute).
+    // plan when valid.
     // Plain queries only — SHOW/DESCRIBE/EXPLAIN/PRAGMA are isQuery but
     // ride the shim path (PRAGMA rewrite, per-query metadata recompute)
     if (single && cacheableVerbs.contains(SqlShim.leadingKeyword(p.sql)))
@@ -457,12 +456,8 @@ final class Session(val id: String, val spark: SparkSession,
         // catalog-managed DML binds literals engine-side and routes
         // (connection.rs:279-295 Value binding); everything else uses
         // Spark's native parameterized-SQL path
-        val tr0 = System.nanoTime()
         catalog.flatMap(_.route(SqlParams.bind(p.sql, padded), txn)) match {
-          case Some(count) =>
-            if (graft.Engine.dmlTrace)
-              System.err.println(f"[dml-trace] session route=${(System.nanoTime() - tr0) / 1e6}%.0f ms")
-            affectedDf(count)
+          case Some(count) => affectedDf(count)
           case None =>
             ensureCatalogViews()
             spark.sql(p.sql, padded.toArray)
@@ -486,9 +481,7 @@ final class Session(val id: String, val spark: SparkSession,
   // ANALYZED plan: parse + catalog resolution are amortized across
   // executions; the optimizer and physical planning re-run per execution
   // (fresh stages, query-time functions re-fold), with adaptive
-  // execution pinned off per the shared per-plan policy — the SAME
-  // regime Bench.scala measures, so the headline throughput now
-  // describes the code path the server ships.
+  // execution pinned off per the per-plan policy in PreparedPlans.
   private[graft] val planCacheHits = new AtomicLong()
   private[graft] val planCacheMisses = new AtomicLong()
   private val cacheableVerbs = Set("SELECT", "WITH", "VALUES", "TABLE", "FROM")
@@ -576,12 +569,8 @@ final class Session(val id: String, val spark: SparkSession,
   private[graft] def calibrateNow(cp: CachedPlan): Unit = {
     val clone = spark.newSession()
     catalog.foreach(_.syncViews(clone, None)) // published snapshots only
-    val (keep, pinnedMs, keptMs) =
-      org.apache.spark.sql.graft.PreparedPlans.calibrate(clone, cp.analyzed)
-    cp.keepAqe = keep
+    cp.keepAqe = org.apache.spark.sql.graft.PreparedPlans.calibrate(clone, cp.analyzed)
     cp.calibrated = true
-    if (graft.Engine.dmlTrace)
-      System.err.println(f"[pin-calibrate] keepAqe=$keep pinned=$pinnedMs%.0f ms kept=$keptMs%.0f ms")
   }
 
   def closePrepared(handle: String): Unit = prepared.synchronized {

@@ -3548,7 +3548,8 @@ object Analytics {
       // value first carries the row count alongside the type row, and
       // the left join marks orphans in the same pass: child_rows =
       // Σcnt (count(cc) ignores NULLs, matching the NULL filter),
-      // child_types = type rows, orphan_types = unmatched type rows.
+      // child_types = type rows, orphan_types = unmatched type rows
+      // (the sums coalesce to 0 over an empty or all-NULL child).
       val byVal = t(s, dir, ct).select(col(cc).as("v")).filter(col("v").isNotNull)
         .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
       byVal
@@ -3556,7 +3557,7 @@ object Analytics {
           col("v") === col("pv"), "left")
         .agg(coalesce(sum(col("cnt")), lit(0L)).as("child_rows"),
           count(lit(1)).as("child_types"),
-          sum(when(col("pv").isNull, 1L).otherwise(0L)).as("orphan_types"))
+          coalesce(sum(when(col("pv").isNull, 1L).otherwise(0L)), lit(0L)).as("orphan_types"))
         .select(lit(s"$ct.$cc -> $pt.$pc").as("dep"),
           col("child_rows").cast(LongType).as("child_rows"),
           col("child_types").cast(LongType).as("child_types"),
@@ -3565,8 +3566,10 @@ object Analytics {
     perPair.reduce(_.union(_))
       .select(col("dep"), col("child_rows"), col("child_types"), col("orphan_types"),
         (col("orphan_types") === 0L).as("contained"),
-        Exact.dround(lit(1.0) - col("orphan_types").cast(DoubleType)
-          / col("child_types").cast(DoubleType), 9).as("containment_ratio"))
+        // no child types: 0/0 is NULL, as the oracle's DOUBLE division
+        // answers it (ANSI Spark would throw DIVIDE_BY_ZERO instead)
+        when(col("child_types") > 0L, Exact.dround(lit(1.0) - col("orphan_types").cast(DoubleType)
+          / col("child_types").cast(DoubleType), 9)).as("containment_ratio"))
       .orderedSmall(col("dep"))
   }
 

@@ -344,12 +344,7 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
     new java.util.WeakHashMap[SparkSession, mutable.Map[String, Long]]())
 
   private def refresh(name: String): Unit = {
-    val t0 = System.nanoTime()
-    val df = tables(name.toLowerCase).df
-    val t1 = System.nanoTime()
-    df.createOrReplaceTempView(name)
-    if (graft.Engine.dmlTrace)
-      System.err.println(f"[dml-trace] refresh df=${(t1 - t0) / 1e6}%.0f view=${(System.nanoTime() - t1) / 1e6}%.0f ms")
+    tables(name.toLowerCase).df.createOrReplaceTempView(name)
     viewVersions(name.toLowerCase) = versionClock.incrementAndGet()
   }
 
@@ -465,7 +460,6 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
     sql match {
       case insertRe(table, colsOpt, values) =>
         get(table).map { t =>
-          val tv0 = System.nanoTime()
           // strip identifier backticks HERE (r19 review: the planned
           // path's batch.toDF named columns with LITERAL backticks, so
           // alignToSchema matched nothing and NULL-filled every target
@@ -487,8 +481,6 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
               .flatMap(t.insertRowsDirect) match {
               case Some(n) =>
                 refresh(table)
-                if (graft.Engine.dmlTrace)
-                  System.err.println(f"[dml-trace] route-insert-direct total=${(System.nanoTime() - tv0) / 1e6}%.0f ms")
                 return Some(n)
               case None => // fall through to the planned path
             }
@@ -502,33 +494,24 @@ final class MutableCatalog(spark: SparkSession, root: Path) {
             case None => batch.toDF(t.schema.fieldNames.take(batch.schema.length).toIndexedSeq: _*)
           }
           val aligned = BatchAlign.alignToSchema(named, t.schema, explicit)
-          val tv1 = System.nanoTime()
           txn match {
             case Some(x) => stageInTxn(table, t, x)(bv => t.stageInsert(bv, aligned))
             case None    =>
               val n = t.insert(aligned)
-              val tv2 = System.nanoTime()
               refresh(table)
-              if (graft.Engine.dmlTrace)
-                System.err.println(f"[dml-trace] route-insert values=${(tv1 - tv0) / 1e6}%.0f core=${(tv2 - tv1) / 1e6}%.0f refresh=${(System.nanoTime() - tv2) / 1e6}%.0f ms")
               n
           }
         }
       case updateRe(table, setTail) =>
         get(table).map { t =>
-          val tv0 = System.nanoTime()
           val (setClause, whereOpt) = splitSetWhere(setTail)
           val assignments = splitAssignments(setClause).map { case (k, v) => k -> expr(v) }.toMap
           val cond = whereOpt.map(expr).getOrElse(lit(true))
-          val tv1 = System.nanoTime()
           txn match {
             case Some(x) => stageInTxn(table, t, x)(bv => t.stageUpdate(bv, cond, assignments))
             case None    =>
               val n = t.update(cond, assignments)
-              val tv2 = System.nanoTime()
               refresh(table)
-              if (graft.Engine.dmlTrace)
-                System.err.println(f"[dml-trace] route-update parse=${(tv1 - tv0) / 1e6}%.0f core=${(tv2 - tv1) / 1e6}%.0f refresh=${(System.nanoTime() - tv2) / 1e6}%.0f ms")
               n
           }
         }

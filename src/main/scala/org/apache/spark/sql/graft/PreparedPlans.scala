@@ -6,11 +6,9 @@ import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Prepared-statement plan-cache support: cacheability and the
-  * per-plan adaptive-execution pin policy shared by the served path
-  * ([[graft.Session]]'s handle cache) and the benchmark's prepared
-  * re-executions — so the bench measures exactly the plan regime the
-  * server ships (VERDICT r19 "what's wrong" #1).
+/** Prepared-statement plan-cache support for the served path
+  * ([[graft.Session]]'s handle cache): cacheability and the per-plan
+  * adaptive-execution pin policy.
   *
   * The reference caches a prepared statement's optimized plan and
   * re-binds values per EXECUTE, never re-planning (prepared.rs:344-372).
@@ -101,8 +99,8 @@ object PreparedPlans {
     df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed
 
   /** MEASURED pin calibration: time full re-executions of the plan
-    * under both regimes and return (keepAqe, pinnedMs, keptMs) by the
-    * min over `reps` interleaved samples per regime.
+    * under both regimes and return whether to keep AQE, judged on the
+    * min over [[CalibrationReps]] interleaved samples per regime.
     *
     * Why measure instead of trusting [[pinnable]]: whether AQE earns
     * its ~110 ms re-planning overhead depends on runtime cardinalities
@@ -120,8 +118,7 @@ object PreparedPlans {
     * execution without driver-side result materialization, so
     * calibrating a wide SELECT cannot OOM the driver.
     */
-  def calibrate(spark: SparkSession, plan: LogicalPlan, reps: Int = 2)
-      : (Boolean, Double, Double) = {
+  def calibrate(spark: SparkSession, plan: LogicalPlan): Boolean = {
     def run(keepAqe: Boolean): Double = {
       val t0 = System.nanoTime()
       reexec(spark, plan, keepAqe).asInstanceOf[ClassicDataFrame]
@@ -133,17 +130,18 @@ object PreparedPlans {
     // COUNTERBALANCED order (A B B A …): within a naive A,B round the
     // second regime always runs warmer (JIT/codegen/page cache), which
     // systematically biased the decision toward whichever ran last
-    (0 until 2 * reps).foreach { i =>
+    (0 until 2 * CalibrationReps).foreach { i =>
       val pinned = (i % 4) == 0 || (i % 4) == 3
       if (pinned) pinnedMs = math.min(pinnedMs, run(keepAqe = false))
       else keptMs = math.min(keptMs, run(keepAqe = true))
     }
-    (keepDecision(pinnedMs, keptMs), pinnedMs, keptMs)
+    keepDecision(pinnedMs, keptMs)
   }
 
-  /** THE keep-AQE policy, shared by [[calibrate]] (the server's
-    * background path) and the bench's collect-based calibration: keep
-    * AQE only when it pays a ≥10% margin. A raw keptMs<pinnedMs
+  private val CalibrationReps = 2
+
+  /** THE keep-AQE policy behind [[calibrate]] (the server's background
+    * path): keep AQE only when it pays a ≥10% margin. A raw keptMs<pinnedMs
     * comparison flips coin-toss queries to keep-AQE on run noise, and
     * the two regimes are not symmetric costs: a kept decision pays
     * AQE's driver-side re-planning on EVERY future re-execution and
@@ -154,6 +152,6 @@ object PreparedPlans {
     * so where AQE genuinely pays (q15's partition coalescing, 18%; a
     * 100 TB broadcast flip) it clears the margin easily.
     */
-  def keepDecision(pinnedMs: Double, keptMs: Double): Boolean =
+  private def keepDecision(pinnedMs: Double, keptMs: Double): Boolean =
     keptMs < pinnedMs * 0.9
 }

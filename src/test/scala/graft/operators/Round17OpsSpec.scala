@@ -29,7 +29,11 @@ class Round17OpsSpec extends SparkTestBase {
     assert(row.getDouble(2) >= 0.0 && row.getDouble(3) <= 1.0)
   }
 
-  test("fd3: hand-built warehouse with one violated and one satisfied dependency") {
+  /** Hand-built fd3 warehouse over `events` (the one table the cases
+    * vary); returns dep -> the result row.
+    */
+  private def fd3Rows(events: org.apache.spark.sql.DataFrame)
+      : Map[String, org.apache.spark.sql.Row] = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("fd3").toString
     def save(name: String, df: org.apache.spark.sql.DataFrame): Unit =
@@ -42,11 +46,16 @@ class Round17OpsSpec extends SparkTestBase {
     save("orders", Seq((40L, 10L), (41L, 10L), (42L, 99L)).toDF("o_orderkey", "o_custkey")) // 99 orphan
     save("lineitem", Seq((40L, 30L, 20L), (41L, 30L, 20L))
       .toDF("l_orderkey", "l_partkey", "l_suppkey"))
-    save("events", Seq((1L, 10L, 1000000000L), (2L, 11L, 2000000000L), (3L, 77L, 3000000000L))
+    save("events", events)
+    Analytics.inclusionDeps(spark, dir).collect().map(r => r.getString(0) -> r).toMap
+  }
+
+  test("fd3: hand-built warehouse with one violated and one satisfied dependency") {
+    import spark.implicits._
+    val rows = fd3Rows(Seq((1L, 10L, 1000000000L), (2L, 11L, 2000000000L), (3L, 77L, 3000000000L))
       .toDF("event_id", "user_id", "ts")) // 77 orphan vs customer
-    val rows = Analytics.inclusionDeps(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getBoolean(4), r.getDouble(5))).toMap
+      .map { case (dep, r) => dep -> (r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getBoolean(4), r.getDouble(5)) }
     assert(rows.size == 8)
     // fully contained FK edge
     assert(rows("lineitem.l_orderkey -> orders.o_orderkey") == ((2L, 2L, 0L, true, 1.0)))
@@ -56,6 +65,18 @@ class Round17OpsSpec extends SparkTestBase {
       ((3L, 2L, 1L, false, 0.5)), rows("orders.o_custkey -> customer.c_custkey").toString)
     assert(rows("events.user_id -> customer.c_custkey")._3 == 1L) // 77
     assert(rows("supplier.s_nationkey -> nation.n_nationkey") == ((2L, 2L, 1L, false, 0.5)))
+  }
+
+  test("fd3: an all-NULL child column has no orphans and no containment ratio") {
+    import spark.implicits._
+    val r = fd3Rows(Seq[(Long, Option[Long], Long)]((1L, None, 1000000000L), (2L, None, 2000000000L))
+      .toDF("event_id", "user_id", "ts"))("events.user_id -> customer.c_custkey")
+    // the oracle's COUNT(*) over zero orphan values is 0, so the empty
+    // child is vacuously contained; 0/0 types has no ratio (NULL, as
+    // DuckDB answers 0.0/0.0) rather than an ANSI divide-by-zero
+    assert(!r.isNullAt(3) && r.getLong(3) == 0L, r.toString)
+    assert((r.getLong(1), r.getLong(2), r.getBoolean(4)) == ((0L, 0L, true)), r.toString)
+    assert(r.isNullAt(5), r.toString)
   }
 
   test("fd3: the TPC-H FK edges are contained on the generated data") {
