@@ -205,23 +205,4 @@ object Engine {
     */
   def registerAll(spark: SparkSession, dir: String): Unit =
     tableNames.foreach { n => table(spark, dir, n).createOrReplaceTempView(n) }
-
-  /** Execute SQL through the compat shim (multi-statement scripts, lock
-    * stripping), returning the last statement's result — reference
-    * semantics at sql/parser.rs:39-60.
-    */
-  def sql(spark: SparkSession, sqlText: String): DataFrame = {
-    val statements = SqlShim.splitStatements(sqlText)
-    require(statements.nonEmpty, "empty SQL script")
-    statements.map { s =>
-      // recompute-per-query semantics for the metadata views
-      // (metadata.rs:26-34): DDL between statements must be visible
-      if (InfoSchema.referencesInfoSchema(s)) InfoSchema.register(spark)
-      SqlShim.parseCatalogCmd(s) match {
-        case Some(cmd) => SqlShim.execCatalogCmd(spark, cmd); spark.emptyDataFrame
-        case None =>
-          spark.sql(InfoSchema.rewriteInfoSchema(SqlShim.rewritePragma(SqlShim.stripSelectLocks(s))))
-      }
-    }.last
-  }
 }

@@ -104,10 +104,13 @@ final case class ServerConfig(
   /** Boot a root session honoring the thread override + init SQL
     * (CONFIGURATION.md SWANLAKE_DUCKDB_THREADS / SWANLAKE_DUCKLAKE_INIT_SQL
     * — the reference executes init SQL right after the engine boots).
+    * The init script runs through a client [[Session]] on the root
+    * SparkSession, so it takes the same statement routing as any client
+    * script (transaction control, PRAGMA, ATTACH/DETACH).
     */
   def newRootSession(appName: String = "graft"): org.apache.spark.sql.SparkSession = {
     val spark = Engine.newSession(appName, duckdbThreads.getOrElse(Engine.defaultCores))
-    ducklakeInitSql.foreach(Engine.sql(spark, _))
+    ducklakeInitSql.foreach(new Session("init", spark).sql(_))
     spark
   }
 }

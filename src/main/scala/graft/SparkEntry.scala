@@ -2,42 +2,26 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators._
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     operators.Tpch.q1(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Tpch.queries ++
-      operators.Relational.queries ++
-      operators.Advanced.queries ++
-      operators.AsOf.queries ++
-      operators.Dedup.queries ++
-      operators.Similarity.queries ++
-      operators.TextAnalysis.queries ++
-      operators.CorpusPipeline.queries ++
-      operators.Skew.queries ++
-      operators.Multimodal.queries ++
-      operators.Analytics.queries ++
-      operators.Sketches.queries ++
-      operators.Warehouse.queries
+  /** Every registry operator, one per implemented operator from SURVEY.md §2. */
+  val ops: Seq[Op] =
+    Tpch.ops ++ Relational.ops ++ Advanced.ops ++ AsOf.ops ++ Dedup.ops ++
+      Similarity.ops ++ TextAnalysis.ops ++ CorpusPipeline.ops ++ Skew.ops ++
+      Multimodal.ops ++ Analytics.ops ++ Sketches.ops ++ Warehouse.ops
+
+  /** Each op's build function by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    ops.map(op => op.name -> op.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    operators.Tpch.oracles ++
-      operators.Relational.oracles ++
-      operators.Advanced.oracles ++
-      operators.AsOf.oracles ++
-      operators.Dedup.oracles ++
-      operators.Similarity.oracles ++
-      operators.TextAnalysis.oracles ++
-      operators.CorpusPipeline.oracles ++
-      operators.Skew.oracles ++
-      operators.Multimodal.oracles ++
-      operators.Analytics.oracles ++
-      operators.Sketches.oracles ++
-      operators.Warehouse.oracles
+    * the same parquet tables. Omits the value-pinned ops. */
+  val oracleSql: Map[String, String] =
+    ops.flatMap(op => op.oracle.map(op.name -> _)).toMap
 }

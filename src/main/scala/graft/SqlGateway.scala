@@ -438,6 +438,10 @@ object SqlGateway {
     case other => jstr(other.toString) // dates, timestamps, strings, intervals
   }
 
+  /** A JSON string literal with quotes, backslashes and every control
+    * char (< 0x20) escaped, so any SQL text or error message parses under
+    * a strict JSON reader (the status page, `oracle_sql.json`).
+    */
   private[graft] def jstr(s: String): String = {
     val sb = new StringBuilder("\"")
     s.foreach {

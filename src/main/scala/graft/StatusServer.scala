@@ -92,9 +92,10 @@ object StatusServer {
     val l = metrics.latencySummary
     val snap = registry.snapshot(now)
     val slow = metrics.slowQueries.map(s =>
-      obj("sql" -> str(s.sql), "millis" -> num(s.millis), "at_ms" -> num(s.atMillis)))
+      obj("sql" -> SqlGateway.jstr(s.sql), "millis" -> num(s.millis), "at_ms" -> num(s.atMillis)))
     val errs = metrics.recentErrors.map(e =>
-      obj("sql" -> str(e.sql), "message" -> str(e.message), "at_ms" -> num(e.atMillis)))
+      obj("sql" -> SqlGateway.jstr(e.sql), "message" -> SqlGateway.jstr(e.message),
+        "at_ms" -> num(e.atMillis)))
     obj(
       "generated_at_ms" -> num(now),
       "metrics" -> obj(
@@ -123,24 +124,11 @@ object StatusServer {
         "average_idle_ms" -> num(snap.averageIdleMs)))
   }
 
-  private def str(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
   private def num(n: Long): String = n.toString
   private def dbl(d: Double): String =
     if (d.isNaN || d.isInfinite) "null" else d.toString
   private def obj(fields: (String, String)*): String =
-    fields.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
+    fields.map { case (k, v) => s"${SqlGateway.jstr(k)}:$v" }.mkString("{", ",", "}")
   private def arr(items: Seq[String]): String = items.mkString("[", ",", "]")
 
   /** Minimal embedded page (the reference embeds status.html and renders

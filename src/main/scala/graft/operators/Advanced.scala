@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,7 +34,6 @@ object Advanced {
   private def dsum(c: Column): Column = Exact.dsum(c)
   private def sqlDsum(e: String): String = Exact.sqlDsum(e)
   private def ts(d: String): Column = to_timestamp(lit(d))
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
 
   private def rev: Column = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 
@@ -494,29 +492,16 @@ object Advanced {
        |ORDER BY l_returnflag""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q2_min_cost_supplier" -> q2 _,
-    "q8_market_share" -> q8 _,
-    "q11_top_value_suppliers" -> q11 _,
-    "q12_late_priority" -> q12 _,
-    "q20_promo_suppliers" -> q20 _,
-    "agg2_cube_orders" -> cubeOrders _,
-    "agg3_grouping_sets" -> groupingSetsOrders _,
-    "piv1_segment_by_nation" -> pivotSegments _,
-    "pct1_price_percentiles" -> pricePercentiles _,
-    "arr1_array_battery" -> arrayBattery _,
-    "stat1_exact_variance" -> exactVariance _)
-
-  val oracles: Map[String, String] = Map(
-    "q2_min_cost_supplier" -> q2Sql,
-    "q8_market_share" -> q8Sql,
-    "q11_top_value_suppliers" -> q11Sql,
-    "q12_late_priority" -> q12Sql,
-    "q20_promo_suppliers" -> q20Sql,
-    "agg2_cube_orders" -> cubeOrdersSql,
-    "agg3_grouping_sets" -> groupingSetsOrdersSql,
-    "piv1_segment_by_nation" -> pivotSegmentsSql,
-    "pct1_price_percentiles" -> pricePercentilesSql,
-    "arr1_array_battery" -> arrayBatterySql,
-    "stat1_exact_variance" -> exactVarianceSql)
+  val ops: Seq[Op] = Seq(
+    Op("q2_min_cost_supplier", q2 _, q2Sql),
+    Op("q8_market_share", q8 _, q8Sql),
+    Op("q11_top_value_suppliers", q11 _, q11Sql),
+    Op("q12_late_priority", q12 _, q12Sql),
+    Op("q20_promo_suppliers", q20 _, q20Sql),
+    Op("agg2_cube_orders", cubeOrders _, cubeOrdersSql),
+    Op("agg3_grouping_sets", groupingSetsOrders _, groupingSetsOrdersSql),
+    Op("piv1_segment_by_nation", pivotSegments _, pivotSegmentsSql),
+    Op("pct1_price_percentiles", pricePercentiles _, pricePercentilesSql),
+    Op("arr1_array_battery", arrayBattery _, arrayBatterySql),
+    Op("stat1_exact_variance", exactVariance _, exactVarianceSql))
 }

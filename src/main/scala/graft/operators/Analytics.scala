@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,8 +19,6 @@ import Par.BoundedOrder
   * are bit-identical across engines (see operators/Exact.scala).
   */
 object Analytics {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
 
   /** FLOOR day bucket for oracle SQL: DuckDB `//` truncates toward zero
     * on negatives while the Spark side uses pmod/floor (same divergence
@@ -5061,157 +5058,80 @@ object Analytics {
        |  ${Exact.sqlDsum("term")} AS spectral_entropy_bits
        |FROM terms""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stat4_weighted_median" -> weightedMedian _,
-    "ev31_prepurchase_activity" -> prepurchaseActivity _,
-    "ts14_spectral_entropy" -> spectralEntropy _,
-    "ts11_periodogram" -> periodogram _,
-    "dq4_cramers_v" -> cramersV _,
-    "exp6_effect_size" -> effectSize _,
-    "imp3_poststratified" -> postStratified _,
-    "ev28_entropy_rate" -> entropyRate _,
-    "ev29_user_burstiness" -> userBurstiness _,
-    "ts12_pacf" -> pacf _,
-    "ts13_ljung_box" -> ((s: SparkSession, d: String) => ljungBox(s, d)),
-    "smp6_systematic_sample" -> systematicSample _,
-    "bs2_jackknife_se" -> jackknifeVariance _,
-    "ev27_kaplan_meier" -> kaplanMeier _,
-    "ts10_seasonal_mase" -> seasonalNaiveMase _,
-    "imp2_ratio_estimate" -> ratioEstimate _,
-    "priv3_t_closeness" -> tClosenessAudit _,
-    "corr4_kendall_daily" -> kendallMonthly _,
-    "drift2_psi_monthly" -> psiMonthly _,
-    "ev26_type_entropy" -> typeEntropy _,
-    "exp5_welch_t" -> welchTTest _,
-    "ts9_mann_kendall" -> mannKendall _,
-    "corr3_spearman_daily" -> spearmanOrders _,
-    "ev25_markov_stationary" -> ((s: SparkSession, d: String) => markovStationary(s, d)),
-    "cal3_calibration_error" -> calibrationError _,
-    "fd3_inclusion_deps" -> inclusionDeps _,
-    "ev24_activity_streaks" -> activityStreaks _,
-    "cal2_brier_decomposition" -> brierDecomposition _,
-    "ts8_theil_sen_trend" -> theilSenTrend _,
-    "ks1_source_ks" -> sourceKs _,
-    "dp1_dp_counts" -> ((s: SparkSession, d: String) => dpCounts(s, d)),
-    "mrr1_retrieval_mrr" -> ((s: SparkSession, d: String) => labelRetrievalMrr(s, d)),
-    "ev22_conversion_hazard" -> conversionHazard _,
-    "ev23_retention_cohorts" -> ((s: SparkSession, d: String) => retentionCohorts(s, d)),
-    "ndcg1_retrieval_ndcg" -> ((s: SparkSession, d: String) => labelRetrievalNdcg(s, d)),
-    "smp4_neyman_allocation" -> neymanAllocation _,
-    "exp4_rank_sum" -> rankSumTest _,
-    "skw2_key_skew" -> keySkewProfile _,
-    "fh1_feature_hashing" -> featureHashing _,
-    "cal1_margin_calibration" -> marginCalibration _,
-    "fair1_group_parity" -> groupParity _,
-    "bs1_poisson_bootstrap" -> poissonBootstrap _,
-    "exp3_diff_in_diff" -> diffInDiff _,
-    "ts6_stl_residuals" -> stlResiduals _,
-    "ts5_revenue_ewma" -> revenueEwma _,
-    "imp1_ht_estimate" -> htEstimate _,
-    "conf1_langid_confusion" -> langIdConfusion _,
-    "iaa1_label_agreement" -> labelAgreement _,
-    "priv1_k_anonymity" -> kAnonymityAudit _,
-    "priv2_l_diversity" -> lDiversityAudit _,
-    "ts4_cusum_changepoint" -> cusumChangepoint _,
-    "auc1_classifier_auc" -> classifierAuc _,
-    "map1_retrieval_ap" -> ((s: SparkSession, d: String) => labelRetrievalAp(s, d)),
-    "ev21_latest_per_key" -> latestPerKey _,
-    "rec1_order_reconcile" -> orderReconcile _,
-    "exp2_cuped" -> ((s: SparkSession, d: String) => cupedReadout(s, d)),
-    "cc1_knn_components" -> knnComponents _,
-    "kmv1_distinct_sketch" -> ((s: SparkSession, d: String) => kmvDistinct(s, d)),
-    "ts3_revenue_autocorr" -> ((s: SparkSession, d: String) => revenueAutocorr(s, d)),
-    "cooc1_skipgram_pairs" -> ((s: SparkSession, d: String) => skipgramPairs(s, d)),
-    "neg1_negative_sampling" -> negativeSampling _,
-    "fld1_kfold_split" -> kfoldSplit _,
-    "gini1_revenue_concentration" -> revenueGini _,
-    "bsk2_association_rules" -> associationRules _,
-    "grow1_mom_growth" -> momGrowth _,
-    "top2_nation_top_parts" -> ((s: SparkSession, d: String) => nationTopParts(s, d)),
-    "clv1_customer_deciles" -> customerDeciles _,
-    "src1_cross_source_overlap" -> crossSourceOverlap _,
-    "txt16_encoding_qa" -> encodingQa _,
-    "bsk1_copurchase_pairs" -> copurchasePairs _,
-    "exp1_ab_test" -> abTestReadout _,
-    "ts2_daily_seasonality" -> dailySeasonality _,
-    "stat3_grouped_moments" -> groupedMoments _,
-    "ev20_session_conversion" -> sessionConversion _,
-    "qf2_gopher_rules" -> gopherRules _)
-
-  val oracles: Map[String, String] = Map(
-    "stat4_weighted_median" -> weightedMedianSql,
-    "ev31_prepurchase_activity" -> prepurchaseActivitySql,
-    "ts14_spectral_entropy" -> spectralEntropySql,
-    "ts11_periodogram" -> periodogramSql,
-    "dq4_cramers_v" -> cramersVSql,
-    "exp6_effect_size" -> effectSizeSql,
-    "imp3_poststratified" -> postStratifiedSql,
-    "ev28_entropy_rate" -> entropyRateSql,
-    "ev29_user_burstiness" -> userBurstinessSql,
-    "ts12_pacf" -> pacfSql,
-    "ts13_ljung_box" -> ljungBoxSql,
-    "smp6_systematic_sample" -> systematicSampleSql,
-    "bs2_jackknife_se" -> jackknifeVarianceSql,
-    "ev27_kaplan_meier" -> kaplanMeierSql,
-    "ts10_seasonal_mase" -> seasonalNaiveMaseSql,
-    "imp2_ratio_estimate" -> ratioEstimateSql,
-    "priv3_t_closeness" -> tClosenessAuditSql,
-    "corr4_kendall_daily" -> kendallMonthlySql,
-    "drift2_psi_monthly" -> psiMonthlySql,
-    "ev26_type_entropy" -> typeEntropySql,
-    "exp5_welch_t" -> welchTTestSql,
-    "ts9_mann_kendall" -> mannKendallSql,
-    "corr3_spearman_daily" -> spearmanOrdersSql,
-    "ev25_markov_stationary" -> markovStationarySql(),
-    "cal3_calibration_error" -> calibrationErrorSql,
-    "fd3_inclusion_deps" -> inclusionDepsSql,
-    "ks1_source_ks" -> sourceKsSql,
-    "dp1_dp_counts" -> dpCountsSql,
-    "mrr1_retrieval_mrr" -> labelRetrievalMrrSql(),
-    "ev22_conversion_hazard" -> conversionHazardSql,
-    "ev23_retention_cohorts" -> retentionCohortsSql(),
-    "ev24_activity_streaks" -> activityStreaksSql(),
-    "cal2_brier_decomposition" -> brierDecompositionSql,
-    "ts8_theil_sen_trend" -> theilSenTrendSql,
-    "ndcg1_retrieval_ndcg" -> labelRetrievalNdcgSql(),
-    "smp4_neyman_allocation" -> neymanAllocationSql,
-    "exp4_rank_sum" -> rankSumTestSql,
-    "skw2_key_skew" -> keySkewProfileSql,
-    "fh1_feature_hashing" -> featureHashingSql,
-    "cal1_margin_calibration" -> marginCalibrationSql,
-    "fair1_group_parity" -> groupParitySql,
-    "bs1_poisson_bootstrap" -> poissonBootstrapSql,
-    "exp3_diff_in_diff" -> diffInDiffSql,
-    "ts6_stl_residuals" -> stlResidualsSql,
-    "ts5_revenue_ewma" -> revenueEwmaSql,
-    "imp1_ht_estimate" -> htEstimateSql,
-    "conf1_langid_confusion" -> langIdConfusionSql,
-    "iaa1_label_agreement" -> labelAgreementSql,
-    "priv1_k_anonymity" -> kAnonymityAuditSql,
-    "priv2_l_diversity" -> lDiversityAuditSql,
-    "ts4_cusum_changepoint" -> cusumChangepointSql,
-    "auc1_classifier_auc" -> classifierAucSql,
-    "map1_retrieval_ap" -> labelRetrievalApSql(),
-    "ev21_latest_per_key" -> latestPerKeySql,
-    "rec1_order_reconcile" -> orderReconcileSql,
-    "exp2_cuped" -> cupedReadoutSql(),
-    "cc1_knn_components" -> knnComponentsSql,
-    "kmv1_distinct_sketch" -> kmvDistinctSql(),
-    "ts3_revenue_autocorr" -> revenueAutocorrSql(),
-    "cooc1_skipgram_pairs" -> skipgramPairsSql(),
-    "neg1_negative_sampling" -> negativeSamplingSql,
-    "fld1_kfold_split" -> kfoldSplitSql,
-    "gini1_revenue_concentration" -> revenueGiniSql,
-    "bsk2_association_rules" -> associationRulesSql,
-    "grow1_mom_growth" -> momGrowthSql,
-    "top2_nation_top_parts" -> nationTopPartsSql(),
-    "clv1_customer_deciles" -> customerDecilesSql,
-    "src1_cross_source_overlap" -> crossSourceOverlapSql,
-    "txt16_encoding_qa" -> encodingQaSql,
-    "bsk1_copurchase_pairs" -> copurchasePairsSql,
-    "exp1_ab_test" -> abTestReadoutSql,
-    "ts2_daily_seasonality" -> dailySeasonalitySql,
-    "stat3_grouped_moments" -> groupedMomentsSql,
-    "ev20_session_conversion" -> sessionConversionSql,
-    "qf2_gopher_rules" -> gopherRulesSql)
+  val ops: Seq[Op] = Seq(
+    Op("stat4_weighted_median", weightedMedian _, weightedMedianSql),
+    Op("ev31_prepurchase_activity", prepurchaseActivity _, prepurchaseActivitySql),
+    Op("ts14_spectral_entropy", spectralEntropy _, spectralEntropySql),
+    Op("ts11_periodogram", periodogram _, periodogramSql),
+    Op("dq4_cramers_v", cramersV _, cramersVSql),
+    Op("exp6_effect_size", effectSize _, effectSizeSql),
+    Op("imp3_poststratified", postStratified _, postStratifiedSql),
+    Op("ev28_entropy_rate", entropyRate _, entropyRateSql),
+    Op("ev29_user_burstiness", userBurstiness _, userBurstinessSql),
+    Op("ts12_pacf", pacf _, pacfSql),
+    Op("ts13_ljung_box", ljungBox(_, _), ljungBoxSql),
+    Op("smp6_systematic_sample", systematicSample _, systematicSampleSql),
+    Op("bs2_jackknife_se", jackknifeVariance _, jackknifeVarianceSql),
+    Op("ev27_kaplan_meier", kaplanMeier _, kaplanMeierSql),
+    Op("ts10_seasonal_mase", seasonalNaiveMase _, seasonalNaiveMaseSql),
+    Op("imp2_ratio_estimate", ratioEstimate _, ratioEstimateSql),
+    Op("priv3_t_closeness", tClosenessAudit _, tClosenessAuditSql),
+    Op("corr4_kendall_daily", kendallMonthly _, kendallMonthlySql),
+    Op("drift2_psi_monthly", psiMonthly _, psiMonthlySql),
+    Op("ev26_type_entropy", typeEntropy _, typeEntropySql),
+    Op("exp5_welch_t", welchTTest _, welchTTestSql),
+    Op("ts9_mann_kendall", mannKendall _, mannKendallSql),
+    Op("corr3_spearman_daily", spearmanOrders _, spearmanOrdersSql),
+    Op("ev25_markov_stationary", markovStationary(_, _), markovStationarySql()),
+    Op("cal3_calibration_error", calibrationError _, calibrationErrorSql),
+    Op("fd3_inclusion_deps", inclusionDeps _, inclusionDepsSql),
+    Op("ev24_activity_streaks", activityStreaks _, activityStreaksSql()),
+    Op("cal2_brier_decomposition", brierDecomposition _, brierDecompositionSql),
+    Op("ts8_theil_sen_trend", theilSenTrend _, theilSenTrendSql),
+    Op("ks1_source_ks", sourceKs _, sourceKsSql),
+    Op("dp1_dp_counts", dpCounts(_, _), dpCountsSql),
+    Op("mrr1_retrieval_mrr", labelRetrievalMrr(_, _), labelRetrievalMrrSql()),
+    Op("ev22_conversion_hazard", conversionHazard _, conversionHazardSql),
+    Op("ev23_retention_cohorts", retentionCohorts(_, _), retentionCohortsSql()),
+    Op("ndcg1_retrieval_ndcg", labelRetrievalNdcg(_, _), labelRetrievalNdcgSql()),
+    Op("smp4_neyman_allocation", neymanAllocation _, neymanAllocationSql),
+    Op("exp4_rank_sum", rankSumTest _, rankSumTestSql),
+    Op("skw2_key_skew", keySkewProfile _, keySkewProfileSql),
+    Op("fh1_feature_hashing", featureHashing _, featureHashingSql),
+    Op("cal1_margin_calibration", marginCalibration _, marginCalibrationSql),
+    Op("fair1_group_parity", groupParity _, groupParitySql),
+    Op("bs1_poisson_bootstrap", poissonBootstrap _, poissonBootstrapSql),
+    Op("exp3_diff_in_diff", diffInDiff _, diffInDiffSql),
+    Op("ts6_stl_residuals", stlResiduals _, stlResidualsSql),
+    Op("ts5_revenue_ewma", revenueEwma _, revenueEwmaSql),
+    Op("imp1_ht_estimate", htEstimate _, htEstimateSql),
+    Op("conf1_langid_confusion", langIdConfusion _, langIdConfusionSql),
+    Op("iaa1_label_agreement", labelAgreement _, labelAgreementSql),
+    Op("priv1_k_anonymity", kAnonymityAudit _, kAnonymityAuditSql),
+    Op("priv2_l_diversity", lDiversityAudit _, lDiversityAuditSql),
+    Op("ts4_cusum_changepoint", cusumChangepoint _, cusumChangepointSql),
+    Op("auc1_classifier_auc", classifierAuc _, classifierAucSql),
+    Op("map1_retrieval_ap", labelRetrievalAp(_, _), labelRetrievalApSql()),
+    Op("ev21_latest_per_key", latestPerKey _, latestPerKeySql),
+    Op("rec1_order_reconcile", orderReconcile _, orderReconcileSql),
+    Op("exp2_cuped", cupedReadout(_, _), cupedReadoutSql()),
+    Op("cc1_knn_components", knnComponents _, knnComponentsSql),
+    Op("kmv1_distinct_sketch", kmvDistinct(_, _), kmvDistinctSql()),
+    Op("ts3_revenue_autocorr", revenueAutocorr(_, _), revenueAutocorrSql()),
+    Op("cooc1_skipgram_pairs", skipgramPairs(_, _), skipgramPairsSql()),
+    Op("neg1_negative_sampling", negativeSampling _, negativeSamplingSql),
+    Op("fld1_kfold_split", kfoldSplit _, kfoldSplitSql),
+    Op("gini1_revenue_concentration", revenueGini _, revenueGiniSql),
+    Op("bsk2_association_rules", associationRules _, associationRulesSql),
+    Op("grow1_mom_growth", momGrowth _, momGrowthSql),
+    Op("top2_nation_top_parts", nationTopParts(_, _), nationTopPartsSql()),
+    Op("clv1_customer_deciles", customerDeciles _, customerDecilesSql),
+    Op("src1_cross_source_overlap", crossSourceOverlap _, crossSourceOverlapSql),
+    Op("txt16_encoding_qa", encodingQa _, encodingQaSql),
+    Op("bsk1_copurchase_pairs", copurchasePairs _, copurchasePairsSql),
+    Op("exp1_ab_test", abTestReadout _, abTestReadoutSql),
+    Op("ts2_daily_seasonality", dailySeasonality _, dailySeasonalitySql),
+    Op("stat3_grouped_moments", groupedMoments _, groupedMomentsSql),
+    Op("ev20_session_conversion", sessionConversion _, sessionConversionSql),
+    Op("qf2_gopher_rules", gopherRules _, gopherRulesSql))
 }

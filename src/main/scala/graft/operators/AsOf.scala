@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -128,8 +127,6 @@ object AsOf {
       .drop("__b", "__lt", "__rt")
   }
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
-
   /** ev4: each view event joined to the user's most recent purchase
     * at-or-before it (classic point-in-time feature lookup).
     */
@@ -231,13 +228,8 @@ object AsOf {
       |  ON v.user_id = p.user_id AND v.ts <= p.ts
       |ORDER BY v.event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev4_asof_purchase" -> eventAsofPurchase _,
-    "ev14_asof_next_purchase" -> eventAsofNextPurchase _,
-    "ev5_range_hour" -> eventRangeHour _)
-
-  val oracles: Map[String, String] = Map(
-    "ev4_asof_purchase" -> eventAsofPurchaseSql,
-    "ev14_asof_next_purchase" -> eventAsofNextPurchaseSql,
-    "ev5_range_hour" -> eventRangeHourSql)
+  val ops: Seq[Op] = Seq(
+    Op("ev4_asof_purchase", eventAsofPurchase _, eventAsofPurchaseSql),
+    Op("ev14_asof_next_purchase", eventAsofNextPurchase _, eventAsofNextPurchaseSql),
+    Op("ev5_range_hour", eventRangeHour _, eventRangeHourSql))
 }

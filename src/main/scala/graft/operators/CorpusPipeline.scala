@@ -212,11 +212,7 @@ object CorpusPipeline {
          |  WHERE m.final_keep""".stripMargin,
       budget)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe1_corpus_manifest" -> ((s: SparkSession, d: String) => corpusManifest(s, d)),
-    "pipe2_training_mix" -> ((s: SparkSession, d: String) => trainingMix(s, d)))
-
-  val oracles: Map[String, String] = Map(
-    "pipe1_corpus_manifest" -> corpusManifestSql(),
-    "pipe2_training_mix" -> trainingMixSql())
+  val ops: Seq[Op] = Seq(
+    Op("pipe1_corpus_manifest", corpusManifest(_, _), corpusManifestSql()),
+    Op("pipe2_training_mix", trainingMix(_, _), trainingMixSql()))
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,8 +26,6 @@ import org.apache.spark.sql.types._
   * exact Jaccard/Hamming ground truth in DedupSpec instead).
   */
 object Dedup {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
 
   private def shuffleWidth(df: DataFrame): Int = Par.shuffleWidth(df)
   private def fanOut(df: DataFrame): DataFrame = Par.fanOut(df)
@@ -1570,57 +1567,35 @@ object Dedup {
        |FROM clusters ORDER BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd20_weighted_jaccard" -> ((s: SparkSession, d: String) => weightedJaccard(s, d)),
-    "dd19_df_cap_audit" -> dfCapAudit _,
-    "dd18_sketch_calibration" -> sketchCalibration _,
-    "dd17_multitier_clusters" -> multiTierClusters _,
-    "dd16_winnow_pairs" -> ((s: SparkSession, d: String) => winnowPairs(s, d)),
-    "leak1_split_leakage" -> splitLeakage _,
-    "dd13_url_canonical" -> urlCanonicalDedup _,
-    "fld2_cluster_split" -> ((s: SparkSession, d: String) => clusterSplit(s, d)),
-    "dd14_canonical_text" -> canonicalTextDedup _,
-    "dd12_incremental_admit" -> ((s: SparkSession, d: String) => incrementalDedup(s, d)),
-    "dd11_prefix_dedup" -> prefixDedup _,
-    "dd9_dup_weights" -> dupWeights _,
-    "dd10_containment_pairs" -> ((s: SparkSession, d: String) => containmentPairs(s, d)),
-    "dd1_exact_dedup" -> exactDedup _,
-    "dd2_ngram_jaccard" -> ngramJaccard _,
-    "dd3_minhash_lsh" -> ((s: SparkSession, d: String) => minhashLsh(s, d, wide = true)),
-    // dd4 wide A/B'd and REJECTED (1.33 -> 1.45 s): the distinct+orderBy
-    // tail pays the extra map-side shuffle blocks more than the token
-    // md5 map gains (dd17's hamming<=8 sub-filter tier DOES win wide —
-    // its downstream is a bare union into CC, not a full sort).
-    "dd4_simhash_pairs" -> ((s: SparkSession, d: String) => simhashPairs(s, d)),
-    "dd5_embedding_neardup" -> ((s: SparkSession, d: String) => embeddingNearDup(s, d)),
-    "dd6_fuzzy_name_pairs" -> ((s: SparkSession, d: String) => fuzzyNamePairs(s, d)),
-    "dd7_duplicate_clusters" -> duplicateClusters _,
-    "dd8_dedup_keep_list" -> dedupKeepList _)
-
   /** Every dedup operator is oracle-checked: the sketch families (dd3
     * MinHash, dd4 SimHash) use engine-portable md5-derived hashes so the
     * DuckDB oracle regenerates identical signatures.
     */
-  val oracles: Map[String, String] = Map(
-    "dd20_weighted_jaccard" -> weightedJaccardSql(),
-    "dd19_df_cap_audit" -> dfCapAuditSql,
-    "dd18_sketch_calibration" -> sketchCalibrationSql,
-    "dd17_multitier_clusters" -> multiTierClustersSql,
-    "dd16_winnow_pairs" -> winnowPairsSql(),
-    "leak1_split_leakage" -> splitLeakageSql,
-    "dd13_url_canonical" -> urlCanonicalDedupSql,
-    "fld2_cluster_split" -> clusterSplitSql(),
-    "dd14_canonical_text" -> canonicalTextDedupSql,
-    "dd12_incremental_admit" -> incrementalDedupSql(),
-    "dd11_prefix_dedup" -> prefixDedupSql,
-    "dd9_dup_weights" -> dupWeightsSql,
-    "dd10_containment_pairs" -> containmentPairsSql(),
-    "dd1_exact_dedup" -> exactDedupSql,
-    "dd2_ngram_jaccard" -> ngramJaccardSql,
-    "dd3_minhash_lsh" -> minhashLshSql,
-    "dd4_simhash_pairs" -> simhashPairsSql,
-    "dd5_embedding_neardup" -> embeddingNearDupSql(),
-    "dd6_fuzzy_name_pairs" -> fuzzyNamePairsSql(),
-    "dd7_duplicate_clusters" -> duplicateClustersSql,
-    "dd8_dedup_keep_list" -> dedupKeepListSql)
+  val ops: Seq[Op] = Seq(
+    Op("dd20_weighted_jaccard", weightedJaccard(_, _), weightedJaccardSql()),
+    Op("dd19_df_cap_audit", dfCapAudit _, dfCapAuditSql),
+    Op("dd18_sketch_calibration", sketchCalibration _, sketchCalibrationSql),
+    Op("dd17_multitier_clusters", multiTierClusters _, multiTierClustersSql),
+    Op("dd16_winnow_pairs", winnowPairs(_, _), winnowPairsSql()),
+    Op("leak1_split_leakage", splitLeakage _, splitLeakageSql),
+    Op("dd13_url_canonical", urlCanonicalDedup _, urlCanonicalDedupSql),
+    Op("fld2_cluster_split", clusterSplit(_, _), clusterSplitSql()),
+    Op("dd14_canonical_text", canonicalTextDedup _, canonicalTextDedupSql),
+    Op("dd12_incremental_admit", incrementalDedup(_, _), incrementalDedupSql()),
+    Op("dd11_prefix_dedup", prefixDedup _, prefixDedupSql),
+    Op("dd9_dup_weights", dupWeights _, dupWeightsSql),
+    Op("dd10_containment_pairs", containmentPairs(_, _), containmentPairsSql()),
+    Op("dd1_exact_dedup", exactDedup _, exactDedupSql),
+    Op("dd2_ngram_jaccard", ngramJaccard _, ngramJaccardSql),
+    Op("dd3_minhash_lsh", (s: SparkSession, d: String) => minhashLsh(s, d, wide = true),
+      minhashLshSql),
+    // dd4 wide A/B'd and REJECTED (1.33 -> 1.45 s): the distinct+orderBy
+    // tail pays the extra map-side shuffle blocks more than the token
+    // md5 map gains (dd17's hamming<=8 sub-filter tier DOES win wide —
+    // its downstream is a bare union into CC, not a full sort).
+    Op("dd4_simhash_pairs", simhashPairs(_, _), simhashPairsSql),
+    Op("dd5_embedding_neardup", embeddingNearDup(_, _), embeddingNearDupSql()),
+    Op("dd6_fuzzy_name_pairs", fuzzyNamePairs(_, _), fuzzyNamePairsSql()),
+    Op("dd7_duplicate_clusters", duplicateClusters _, duplicateClustersSql),
+    Op("dd8_dedup_keep_list", dedupKeepList _, dedupKeepListSql))
 }

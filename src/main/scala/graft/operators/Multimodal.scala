@@ -363,13 +363,6 @@ object Multimodal {
       |  CAST(COUNT(*) AS DOUBLE) / CAST(LEAST(MAX(nb_a), MAX(nb_b)) AS DOUBLE) AS containment
       |FROM pairs GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm2_decode_features" -> decodeFeatures _,
-    "mm3_frame_sample" -> ((s: SparkSession, d: String) => sampleFrames(s, d)),
-    "mm5_payload_dedup" -> payloadDedup _,
-    "mm6_block_neardup" -> ((s: SparkSession, d: String) => blockNearDup(s, d)),
-    "mm4_meta_stats" -> metaStats _)
-
   /** mm3 oracle: the frame-sampling slice plumbing is pure byte
     * arithmetic, so DuckDB mirrors it exactly over encode(text) blobs.
     */
@@ -426,10 +419,10 @@ object Multimodal {
        |ORDER BY doc_id""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "mm2_decode_features" -> decodeFeaturesSql,
-    "mm3_frame_sample" -> sampleFramesSql,
-    "mm5_payload_dedup" -> payloadDedupSql,
-    "mm6_block_neardup" -> blockNearDupSql,
-    "mm4_meta_stats" -> metaStatsSql)
+  val ops: Seq[Op] = Seq(
+    Op("mm2_decode_features", decodeFeatures _, decodeFeaturesSql),
+    Op("mm3_frame_sample", sampleFrames(_, _), sampleFramesSql),
+    Op("mm5_payload_dedup", payloadDedup _, payloadDedupSql),
+    Op("mm6_block_neardup", blockNearDup(_, _), blockNearDupSql),
+    Op("mm4_meta_stats", metaStats _, metaStatsSql))
 }

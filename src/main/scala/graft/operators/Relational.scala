@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,7 +23,6 @@ object Relational {
   private def dsum(c: Column): Column = Exact.dsum(c)
   private def sqlDsum(e: String): String = Exact.sqlDsum(e)
   private def micros(c: Column): Column = Exact.micros(c)
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
 
   // === window: rank + running total per customer ===========================
   def windowOrders(s: SparkSession, dir: String): DataFrame = {
@@ -1373,69 +1371,36 @@ object Relational {
       |FROM att WHERE event_type = 'purchase'
       |ORDER BY purchase_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev19_attribution" -> lastTouchAttribution _,
-    "reg1_value_trend" -> valueTrend _,
-    "ev18_type_affinity" -> typeAffinity _,
-    "dq1_integrity_audit" -> integrityAudit _,
-    "dq3_benford_audit" -> benfordAudit _,
-    "ev16_activity_profile" -> activityProfile _,
-    "seq1_event_paths" -> ((s: SparkSession, d: String) => eventPaths(s, d)),
-    "ev15_dau_wau" -> dauWau _,
-    "ts1_hourly_grid" -> hourlyGrid _,
-    "rng1_range_bounds" -> ((s: SparkSession, d: String) => rangeBounds(s, d)),
-    "ev6_json_struct" -> eventsJsonStruct _,
-    "w3_ranking_battery" -> windowRanks _,
-    "stat2_exact_correlation" -> exactCorrelation _,
-    "w1_customer_running_total" -> windowOrders _,
-    "w2_event_sessions" -> eventSessions _,
-    "set1_nation_setops" -> setOps _,
-    "agg1_rollup_orders" -> rollupOrders _,
-    "f1_scalar_strings" -> scalarStrings _,
-    "f2_scalar_dates" -> scalarDates _,
-    "ev1_hourly_windows" -> eventsHourly _,
-    "ev2_top_purchasers" -> eventsTopUsers _,
-    "ev7_funnel_stages" -> eventFunnel _,
-    "ev8_cohort_retention" -> cohortRetention _,
-    "ev9_trailing_spend" -> trailingSpend _,
-    "ev10_event_transitions" -> eventTransitions _,
-    "ev11_hourly_anomalies" -> eventAnomalies _,
-    "prof1_table_profile" -> tableProfile _,
-    "prof2_corr_matrix" -> corrMatrix _,
-    "ev12_interarrival" -> interArrival _,
-    "ev13_user_rfm" -> userRfm _,
-    "ev3_json_extract" -> eventsJson _)
-
-  val oracles: Map[String, String] = Map(
-    "ev19_attribution" -> lastTouchAttributionSql,
-    "reg1_value_trend" -> valueTrendSql,
-    "ev18_type_affinity" -> typeAffinitySql,
-    "dq1_integrity_audit" -> integrityAuditSql,
-    "dq3_benford_audit" -> benfordAuditSql,
-    "ev16_activity_profile" -> activityProfileSql,
-    "seq1_event_paths" -> eventPathsSql(),
-    "ev15_dau_wau" -> dauWauSql,
-    "ts1_hourly_grid" -> hourlyGridSql,
-    "rng1_range_bounds" -> rangeBoundsSql(),
-    "ev6_json_struct" -> eventsJsonStructSql,
-    "w3_ranking_battery" -> windowRanksSql,
-    "stat2_exact_correlation" -> exactCorrelationSql,
-    "w1_customer_running_total" -> windowOrdersSql,
-    "w2_event_sessions" -> eventSessionsSql,
-    "set1_nation_setops" -> setOpsSql,
-    "agg1_rollup_orders" -> rollupOrdersSql,
-    "f1_scalar_strings" -> scalarStringsSql,
-    "f2_scalar_dates" -> scalarDatesSql,
-    "ev1_hourly_windows" -> eventsHourlySql,
-    "ev2_top_purchasers" -> eventsTopUsersSql,
-    "ev7_funnel_stages" -> eventFunnelSql,
-    "ev8_cohort_retention" -> cohortRetentionSql,
-    "ev10_event_transitions" -> eventTransitionsSql,
-    "ev11_hourly_anomalies" -> eventAnomaliesSql,
-    "prof1_table_profile" -> tableProfileSql,
-    "prof2_corr_matrix" -> corrMatrixSql,
-    "ev12_interarrival" -> interArrivalSql,
-    "ev13_user_rfm" -> userRfmSql,
-    "ev9_trailing_spend" -> trailingSpendSql,
-    "ev3_json_extract" -> eventsJsonSql)
+  val ops: Seq[Op] = Seq(
+    Op("ev19_attribution", lastTouchAttribution _, lastTouchAttributionSql),
+    Op("reg1_value_trend", valueTrend _, valueTrendSql),
+    Op("ev18_type_affinity", typeAffinity _, typeAffinitySql),
+    Op("dq1_integrity_audit", integrityAudit _, integrityAuditSql),
+    Op("dq3_benford_audit", benfordAudit _, benfordAuditSql),
+    Op("ev16_activity_profile", activityProfile _, activityProfileSql),
+    Op("seq1_event_paths", eventPaths(_, _), eventPathsSql()),
+    Op("ev15_dau_wau", dauWau _, dauWauSql),
+    Op("ts1_hourly_grid", hourlyGrid _, hourlyGridSql),
+    Op("rng1_range_bounds", rangeBounds(_, _), rangeBoundsSql()),
+    Op("ev6_json_struct", eventsJsonStruct _, eventsJsonStructSql),
+    Op("w3_ranking_battery", windowRanks _, windowRanksSql),
+    Op("stat2_exact_correlation", exactCorrelation _, exactCorrelationSql),
+    Op("w1_customer_running_total", windowOrders _, windowOrdersSql),
+    Op("w2_event_sessions", eventSessions _, eventSessionsSql),
+    Op("set1_nation_setops", setOps _, setOpsSql),
+    Op("agg1_rollup_orders", rollupOrders _, rollupOrdersSql),
+    Op("f1_scalar_strings", scalarStrings _, scalarStringsSql),
+    Op("f2_scalar_dates", scalarDates _, scalarDatesSql),
+    Op("ev1_hourly_windows", eventsHourly _, eventsHourlySql),
+    Op("ev2_top_purchasers", eventsTopUsers _, eventsTopUsersSql),
+    Op("ev7_funnel_stages", eventFunnel _, eventFunnelSql),
+    Op("ev8_cohort_retention", cohortRetention _, cohortRetentionSql),
+    Op("ev9_trailing_spend", trailingSpend _, trailingSpendSql),
+    Op("ev10_event_transitions", eventTransitions _, eventTransitionsSql),
+    Op("ev11_hourly_anomalies", eventAnomalies _, eventAnomaliesSql),
+    Op("prof1_table_profile", tableProfile _, tableProfileSql),
+    Op("prof2_corr_matrix", corrMatrix _, corrMatrixSql),
+    Op("ev12_interarrival", interArrival _, interArrivalSql),
+    Op("ev13_user_rfm", userRfm _, userRfmSql),
+    Op("ev3_json_extract", eventsJson _, eventsJsonSql))
 }

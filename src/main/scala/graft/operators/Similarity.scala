@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,8 +24,6 @@ import Par.BoundedOrder
   * left-fold, bit-identical to DuckDB's list_dot_product ordering.
   */
 object Similarity {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
 
   private def vecD(name: String): Column =
     transform(col(name), _.cast(DoubleType))
@@ -2169,69 +2166,36 @@ object Similarity {
        |  ${Exact.sqlDround(Exact.sqlDavg("sil"), 9)} AS mean_silhouette
        |FROM sv GROUP BY la ORDER BY label""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cl2_silhouette" -> ((s: SparkSession, d: String) => silhouette(s, d)),
-    "tri1_knn_triangles" -> ((s: SparkSession, d: String) => knnTriangles(s, d)),
-    "tri2_clustering_coeff" -> ((s: SparkSession, d: String) => clusteringCoefficient(s, d)),
-    "sp1_knn_hops" -> ((s: SparkSession, d: String) => knnHops(s, d)),
-    "kcore1_knn_core" -> ((s: SparkSession, d: String) => knnKcore(s, d)),
-    "sim11_diverse_select" -> ((s: SparkSession, d: String) => diverseSelect(s, d)),
-    "sim9_ann_recall" -> ((s: SparkSession, d: String) => annRecall(s, d)),
-    "rp1_random_projection" -> randomProjection _,
-    "sim7_centroid_drift" -> centroidDrift _,
-    "hub1_knn_hubness" -> ((s: SparkSession, d: String) => knnHubness(s, d)),
-    "cl1_cluster_purity" -> ((s: SparkSession, d: String) => clusterPurity(s, d)),
-    "imb1_label_balance" -> labelBalance _,
-    "imb2_effective_weights" -> ((s: SparkSession, d: String) => effectiveNumberWeights(s, d)),
-    "lp1_label_propagation" -> ((s: SparkSession, d: String) => labelPropagation(s, d)),
-    "km1_kmeans_assign" -> ((s: SparkSession, d: String) => kmeansAssign(s, d)),
-    "km2_kmeans_update" -> ((s: SparkSession, d: String) => kmeansUpdate(s, d)),
-    "sd1_semdedup" -> ((s: SparkSession, d: String) => semDedup(s, d)),
-    "pr1_pagerank" -> ((s: SparkSession, d: String) => pageRank(s, d)),
-    "cov1_embedding_covariance" -> embeddingCovariance _,
-    "out1_label_outliers" -> ((s: SparkSession, d: String) => embeddingOutliers(s, d)),
-    "sim6_mutual_knn" -> ((s: SparkSession, d: String) => mutualKnn(s, d)),
-    "sim5_int8_quantization" -> embeddingQuantization _,
-    "sim1_cosine_topk" -> ((s: SparkSession, d: String) => cosineTopK(s, d)),
-    "neg2_hard_negatives" -> ((s: SparkSession, d: String) => hardNegatives(s, d)),
-    "sim2_label_centroids" -> labelCentroids _,
-    "sim3_ann_lsh_topk" -> ((s: SparkSession, d: String) => annTopK(s, d)),
-    "sim4_ann_ivf_topk" -> ((s: SparkSession, d: String) => ivfTopK(s, d)),
-    "ivf2_posting_balance" -> ivfPostingBalance _,
-    "pq1_product_quantization" -> pqEncode _,
-    "sim10_truncation_audit" -> ((s: SparkSession, d: String) => truncationAudit(s, d)),
-    "emb2_isotropy_audit" -> isotropyAudit _)
-
-  val oracles: Map[String, String] = Map(
-    "cl2_silhouette" -> silhouetteSql(),
-    "tri1_knn_triangles" -> knnTrianglesSql(),
-    "tri2_clustering_coeff" -> clusteringCoefficientSql(),
-    "sp1_knn_hops" -> knnHopsSql(),
-    "kcore1_knn_core" -> knnKcoreSql(),
-    "sim11_diverse_select" -> diverseSelectSql(),
-    "sim9_ann_recall" -> annRecallSql(),
-    "rp1_random_projection" -> randomProjectionSql,
-    "sim7_centroid_drift" -> centroidDriftSql,
-    "hub1_knn_hubness" -> knnHubnessSql(),
-    "cl1_cluster_purity" -> clusterPuritySql(),
-    "imb1_label_balance" -> labelBalanceSql,
-    "imb2_effective_weights" -> effectiveNumberWeightsSql(),
-    "lp1_label_propagation" -> labelPropagationSql(),
-    "km1_kmeans_assign" -> kmeansAssignSql(),
-    "km2_kmeans_update" -> kmeansUpdateSql(),
-    "sd1_semdedup" -> semDedupSql(),
-    "pr1_pagerank" -> pageRankSql(),
-    "cov1_embedding_covariance" -> embeddingCovarianceSql,
-    "out1_label_outliers" -> embeddingOutliersSql(),
-    "sim6_mutual_knn" -> mutualKnnSql(),
-    "sim5_int8_quantization" -> embeddingQuantizationSql,
-    "sim1_cosine_topk" -> cosineTopKSql(),
-    "neg2_hard_negatives" -> hardNegativesSql(),
-    "sim2_label_centroids" -> labelCentroidsSql,
-    "sim3_ann_lsh_topk" -> annTopKSql(),
-    "sim4_ann_ivf_topk" -> ivfTopKSql(),
-    "ivf2_posting_balance" -> ivfPostingBalanceSql,
-    "pq1_product_quantization" -> pqEncodeSql,
-    "sim10_truncation_audit" -> truncationAuditSql(),
-    "emb2_isotropy_audit" -> isotropyAuditSql)
+  val ops: Seq[Op] = Seq(
+    Op("cl2_silhouette", silhouette(_, _), silhouetteSql()),
+    Op("tri1_knn_triangles", knnTriangles(_, _), knnTrianglesSql()),
+    Op("tri2_clustering_coeff", clusteringCoefficient(_, _), clusteringCoefficientSql()),
+    Op("sp1_knn_hops", knnHops(_, _), knnHopsSql()),
+    Op("kcore1_knn_core", knnKcore(_, _), knnKcoreSql()),
+    Op("sim11_diverse_select", diverseSelect(_, _), diverseSelectSql()),
+    Op("sim9_ann_recall", annRecall(_, _), annRecallSql()),
+    Op("rp1_random_projection", randomProjection _, randomProjectionSql),
+    Op("sim7_centroid_drift", centroidDrift _, centroidDriftSql),
+    Op("hub1_knn_hubness", knnHubness(_, _), knnHubnessSql()),
+    Op("cl1_cluster_purity", clusterPurity(_, _), clusterPuritySql()),
+    Op("imb1_label_balance", labelBalance _, labelBalanceSql),
+    Op("imb2_effective_weights", effectiveNumberWeights(_, _), effectiveNumberWeightsSql()),
+    Op("lp1_label_propagation", labelPropagation(_, _), labelPropagationSql()),
+    Op("km1_kmeans_assign", kmeansAssign(_, _), kmeansAssignSql()),
+    Op("km2_kmeans_update", kmeansUpdate(_, _), kmeansUpdateSql()),
+    Op("sd1_semdedup", semDedup(_, _), semDedupSql()),
+    Op("pr1_pagerank", pageRank(_, _), pageRankSql()),
+    Op("cov1_embedding_covariance", embeddingCovariance _, embeddingCovarianceSql),
+    Op("out1_label_outliers", embeddingOutliers(_, _), embeddingOutliersSql()),
+    Op("sim6_mutual_knn", mutualKnn(_, _), mutualKnnSql()),
+    Op("sim5_int8_quantization", embeddingQuantization _, embeddingQuantizationSql),
+    Op("sim1_cosine_topk", cosineTopK(_, _), cosineTopKSql()),
+    Op("neg2_hard_negatives", hardNegatives(_, _), hardNegativesSql()),
+    Op("sim2_label_centroids", labelCentroids _, labelCentroidsSql),
+    Op("sim3_ann_lsh_topk", annTopK(_, _), annTopKSql()),
+    Op("sim4_ann_ivf_topk", ivfTopK(_, _), ivfTopKSql()),
+    Op("ivf2_posting_balance", ivfPostingBalance _, ivfPostingBalanceSql),
+    Op("pq1_product_quantization", pqEncode _, pqEncodeSql),
+    Op("sim10_truncation_audit", truncationAudit(_, _), truncationAuditSql()),
+    Op("emb2_isotropy_audit", isotropyAudit _, isotropyAuditSql))
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,8 +19,6 @@ import Par.BoundedOrder
   * Spark-native scale story is noted per operator.
   */
 object Sketches {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
 
   /** The one md5 slot-position family behind bf1/cms1/cms2:
     * md5("prefix#i#key") first 8 hex chars mod width. `sqlMdPos` is the
@@ -546,17 +543,10 @@ object Sketches {
        |FROM exact, est""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "hll1_hll_sketch" -> hllSketch _,
-    "cms2_join_cardinality" -> cmsJoinCardinality _,
-    "hll2_sketch_union" -> hllUnion _,
-    "bf1_bloom_prune" -> bloomPrune _,
-    "cms1_heavy_hitters" -> cmsHeavyHitters _)
-
-  val oracles: Map[String, String] = Map(
-    "hll1_hll_sketch" -> hllSketchSql,
-    "cms2_join_cardinality" -> cmsJoinCardinalitySql,
-    "hll2_sketch_union" -> hllUnionSql,
-    "bf1_bloom_prune" -> bloomPruneSql,
-    "cms1_heavy_hitters" -> cmsHeavyHittersSql)
+  val ops: Seq[Op] = Seq(
+    Op("hll1_hll_sketch", hllSketch _, hllSketchSql),
+    Op("cms2_join_cardinality", cmsJoinCardinality _, cmsJoinCardinalitySql),
+    Op("hll2_sketch_union", hllUnion _, hllUnionSql),
+    Op("bf1_bloom_prune", bloomPrune _, bloomPruneSql),
+    Op("cms1_heavy_hitters", cmsHeavyHitters _, cmsHeavyHittersSql))
 }

@@ -134,9 +134,6 @@ object Skew {
        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "skw1_salted_revenue" -> saltedRevenue _)
-
-  val oracles: Map[String, String] = Map(
-    "skw1_salted_revenue" -> saltedRevenueSql)
+  val ops: Seq[Op] = Seq(
+    Op("skw1_salted_revenue", saltedRevenue _, saltedRevenueSql))
 }

@@ -18,8 +18,6 @@ import Par.BoundedOrder
   */
 object TextAnalysis {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
-
   /** documents (doc_id, text) fanned to the shuffle width before the
     * per-row-expensive text kernels (md5 sketches, regex tokenization,
     * char folds) — identity once the scan has real splits (Par.fanOut).
@@ -3539,136 +3537,71 @@ object TextAnalysis {
        |  ${Exact.sqlDsum("term")} AS entropy_bits
        |FROM terms""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "txt19_char_bigram_entropy" -> ((s: SparkSession, d: String) => charBigramEntropy(s, d)),
-    "lm5_stupid_backoff" -> ((s: SparkSession, d: String) => stupidBackoff(s, d)),
-    "txt18_term_burstiness" -> ((s: SparkSession, d: String) => termBurstiness(s, d)),
-    "lm4_good_turing" -> ((s: SparkSession, d: String) => goodTuring(s, d)),
-    "fs1_chi2_tokens" -> ((s: SparkSession, d: String) => chi2Tokens(s, d)),
-    "tok8_truncation_loss" -> ((s: SparkSession, d: String) => truncationLoss(s, d)),
-    "smp5_reservoir_sample" -> ((s: SparkSession, d: String) => reservoirSample(s, d)),
-    "gram3_ngram_novelty" -> ((s: SparkSession, d: String) => ngramNovelty(s, d)),
-    "pmi1_collocations" -> ((s: SparkSession, d: String) => pmiCollocations(s, d)),
-    "mix2_token_allocation" -> tokenAllocation _,
-    "mix3_temperature_mix" -> ((s: SparkSession, d: String) => temperatureMix(s, d)),
-    "lm2_trigram_lm" -> ((s: SparkSession, d: String) => trigramLm(s, d)),
-    "gram2_char_trigrams" -> ((s: SparkSession, d: String) => charTrigrams(s, d)),
-    "shuf1_global_shuffle" -> ((s: SparkSession, d: String) => globalShuffle(s, d)),
-    "shuf2_interleave_audit" -> ((s: SparkSession, d: String) => interleaveAudit(s, d)),
-    "txt15_readability" -> readability _,
-    "tok2_fertility" -> bpeFertility _,
-    "js1_source_overlap" -> sourceOverlap _,
-    "txt14_sentence_stats" -> sentenceStats _,
-    "drift1_source_kl" -> ((s: SparkSession, d: String) => sourceDrift(s, d)),
-    "qc1_quality_classifier" -> qualityMargin _,
-    "bpe1_pair_counts" -> ((s: SparkSession, d: String) => bpePairCounts(s, d)),
-    "bpe2_merge_training" -> ((s: SparkSession, d: String) => bpeMergeTraining(s, d)),
-    "tok5_bpe_encode" -> ((s: SparkSession, d: String) => bpeEncode(s, d)),
-    "cont3_exact_ngram" -> ((s: SparkSession, d: String) => exactNgramDecontam(s, d)),
-    "tok6_heaps_curve" -> heapsCurve _,
-    "span2_boilerplate_frac" -> ((s: SparkSession, d: String) => boilerplateFraction(s, d)),
-    "zipf1_rank_slope" -> ((s: SparkSession, d: String) => zipfSlope(s, d)),
-    "txt13_char_classes" -> docCharClasses _,
-    "hist1_token_histogram" -> ((s: SparkSession, d: String) => tokenHistogram(s, d)),
-    "red1_pii_scan" -> docPiiScan _,
-    "srch1_bm25_topk" -> ((s: SparkSession, d: String) => bm25TopDocs(s, d)),
-    "srch3_qlm_topk" -> ((s: SparkSession, d: String) => qlmTopDocs(s, d)),
-    "lm3_kneser_ney" -> ((s: SparkSession, d: String) => knBigramLm(s, d)),
-    "srch2_hybrid_rrf" -> ((s: SparkSession, d: String) => hybridRetrieval(s, d)),
-    "cur1_curriculum_phases" -> curriculumPhases _,
-    "qf3_perplexity_filter" -> ((s: SparkSession, d: String) => perplexityFilter(s, d)),
-    "tok4_coverage_curve" -> ((s: SparkSession, d: String) => coverageCurve(s, d)),
-    "chunk1_doc_spans" -> ((s: SparkSession, d: String) => docChunks(s, d)),
-    "span1_repeated_ngrams" -> ((s: SparkSession, d: String) => repeatedSpans(s, d)),
-    "mem1_memorization_risk" -> ((s: SparkSession, d: String) => memorizationRisk(s, d)),
-    "rep1_corpus_report" -> corpusReport _,
-    "smp3_mixture_balance" -> mixtureBalance _,
-    "tok1_vocab_coverage" -> ((s: SparkSession, d: String) => vocabCoverage(s, d)),
-    "lm1_bigram_topk" -> ((s: SparkSession, d: String) => bigramLm(s, d)),
-    "sel1_dsir_weights" -> dsirWeights _,
-    "txt11_unigram_logprob" -> docUnigramLogProb _,
-    "txt12_tfidf_terms" -> ((s: SparkSession, d: String) => docTfidf(s, d)),
-    "txt9_repetition" -> docRepetition _,
-    "txt10_vocab_richness" -> docVocabRichness _,
-    "smp2_language_cap" -> ((s: SparkSession, d: String) => languageCap(s, d)),
-    "pack1_sequence_packing" -> ((s: SparkSession, d: String) => sequencePacking(s, d)),
-    "pack2_packing_waste" -> ((s: SparkSession, d: String) => packingWaste(s, d)),
-    "cont1_benchmark_overlap" -> benchmarkContamination _,
-    "cont2_benchmark_leakage" -> benchmarkLeakage _,
-    "smp1_stratified_sample" -> stratifiedSample _,
-    "txt1_token_stats" -> docTokenStats _,
-    "txt2_lang_id" -> docLangId _,
-    "txt3_fingerprint" -> docFingerprint _,
-    "txt4_bpe_tokens" -> docBpeTokens _,
-    "txt5_rolling_hash" -> docRollingHash _,
-    "txt6_quality_filter" -> docQualityFilter _,
-    "txt7_top_tokens" -> ((s: SparkSession, d: String) => topTokens(s, d)),
-    "txt8_compression_ratio" -> compressionRatio _,
-    "mm1_payload_stats" -> mmPayloadStats _)
-
-  val oracles: Map[String, String] = Map(
-    "txt19_char_bigram_entropy" -> charBigramEntropySql,
-    "lm5_stupid_backoff" -> stupidBackoffSql(),
-    "txt18_term_burstiness" -> termBurstinessSql(),
-    "lm4_good_turing" -> goodTuringSql,
-    "fs1_chi2_tokens" -> chi2TokensSql(),
-    "gram3_ngram_novelty" -> ngramNoveltySql(),
-    "pmi1_collocations" -> pmiCollocationsSql(),
-    "mix2_token_allocation" -> tokenAllocationSql,
-    "mix3_temperature_mix" -> temperatureMixSql(),
-    "lm2_trigram_lm" -> trigramLmSql(),
-    "gram2_char_trigrams" -> charTrigramsSql(),
-    "shuf1_global_shuffle" -> globalShuffleSql(),
-    "shuf2_interleave_audit" -> interleaveAuditSql(),
-    "txt15_readability" -> readabilitySql,
-    "tok2_fertility" -> bpeFertilitySql,
-    "js1_source_overlap" -> sourceOverlapSql,
-    "txt14_sentence_stats" -> sentenceStatsSql,
-    "drift1_source_kl" -> sourceDriftSql(),
-    "qc1_quality_classifier" -> qualityMarginSql,
-    "bpe1_pair_counts" -> bpePairCountsSql(),
-    "bpe2_merge_training" -> bpeMergeTrainingSql(),
-    "tok5_bpe_encode" -> bpeEncodeSql(),
-    "cont3_exact_ngram" -> exactNgramDecontamSql(),
-    "tok6_heaps_curve" -> heapsCurveSql,
-    "span2_boilerplate_frac" -> boilerplateFractionSql(),
-    "zipf1_rank_slope" -> zipfSlopeSql(),
-    "txt13_char_classes" -> docCharClassesSql,
-    "hist1_token_histogram" -> tokenHistogramSql(),
-    "red1_pii_scan" -> docPiiScanSql,
-    "srch1_bm25_topk" -> bm25TopDocsSql(),
-    "srch3_qlm_topk" -> qlmTopDocsSql(),
-    "lm3_kneser_ney" -> knBigramLmSql(),
-    "srch2_hybrid_rrf" -> hybridRetrievalSql(),
-    "cur1_curriculum_phases" -> curriculumPhasesSql,
-    "qf3_perplexity_filter" -> perplexityFilterSql(),
-    "tok4_coverage_curve" -> coverageCurveSql(),
-    "chunk1_doc_spans" -> docChunksSql(),
-    "span1_repeated_ngrams" -> repeatedSpansSql(),
-    "mem1_memorization_risk" -> memorizationRiskSql(),
-    "rep1_corpus_report" -> corpusReportSql,
-    "smp3_mixture_balance" -> mixtureBalanceSql,
-    "tok8_truncation_loss" -> truncationLossSql(),
-    "smp5_reservoir_sample" -> reservoirSampleSql(),
-    "tok1_vocab_coverage" -> vocabCoverageSql(),
-    "lm1_bigram_topk" -> bigramLmSql(),
-    "sel1_dsir_weights" -> dsirWeightsSql,
-    "txt11_unigram_logprob" -> docUnigramLogProbSql,
-    "txt12_tfidf_terms" -> docTfidfSql(),
-    "txt9_repetition" -> docRepetitionSql,
-    "txt10_vocab_richness" -> docVocabRichnessSql,
-    "smp2_language_cap" -> languageCapSql(),
-    "pack1_sequence_packing" -> sequencePackingSql(),
-    "pack2_packing_waste" -> packingWasteSql(),
-    "cont1_benchmark_overlap" -> benchmarkContaminationSql,
-    "cont2_benchmark_leakage" -> benchmarkLeakageSql,
-    "smp1_stratified_sample" -> stratifiedSampleSql,
-    "txt1_token_stats" -> docTokenStatsSql,
-    "txt2_lang_id" -> docLangIdSql,
-    "txt3_fingerprint" -> docFingerprintSql,
-    "txt4_bpe_tokens" -> docBpeTokensSql,
-    "txt5_rolling_hash" -> docRollingHashSql,
-    "txt6_quality_filter" -> docQualityFilterSql,
-    "txt7_top_tokens" -> topTokensSql(),
-    "mm1_payload_stats" -> mmPayloadStatsSql)
+  val ops: Seq[Op] = Seq(
+    Op("txt19_char_bigram_entropy", charBigramEntropy(_, _), charBigramEntropySql),
+    Op("lm5_stupid_backoff", stupidBackoff(_, _), stupidBackoffSql()),
+    Op("txt18_term_burstiness", termBurstiness(_, _), termBurstinessSql()),
+    Op("lm4_good_turing", goodTuring(_, _), goodTuringSql),
+    Op("fs1_chi2_tokens", chi2Tokens(_, _), chi2TokensSql()),
+    Op("tok8_truncation_loss", truncationLoss(_, _), truncationLossSql()),
+    Op("smp5_reservoir_sample", reservoirSample(_, _), reservoirSampleSql()),
+    Op("gram3_ngram_novelty", ngramNovelty(_, _), ngramNoveltySql()),
+    Op("pmi1_collocations", pmiCollocations(_, _), pmiCollocationsSql()),
+    Op("mix2_token_allocation", tokenAllocation _, tokenAllocationSql),
+    Op("mix3_temperature_mix", temperatureMix(_, _), temperatureMixSql()),
+    Op("lm2_trigram_lm", trigramLm(_, _), trigramLmSql()),
+    Op("gram2_char_trigrams", charTrigrams(_, _), charTrigramsSql()),
+    Op("shuf1_global_shuffle", globalShuffle(_, _), globalShuffleSql()),
+    Op("shuf2_interleave_audit", interleaveAudit(_, _), interleaveAuditSql()),
+    Op("txt15_readability", readability _, readabilitySql),
+    Op("tok2_fertility", bpeFertility _, bpeFertilitySql),
+    Op("js1_source_overlap", sourceOverlap _, sourceOverlapSql),
+    Op("txt14_sentence_stats", sentenceStats _, sentenceStatsSql),
+    Op("drift1_source_kl", sourceDrift(_, _), sourceDriftSql()),
+    Op("qc1_quality_classifier", qualityMargin _, qualityMarginSql),
+    Op("bpe1_pair_counts", bpePairCounts(_, _), bpePairCountsSql()),
+    Op("bpe2_merge_training", bpeMergeTraining(_, _), bpeMergeTrainingSql()),
+    Op("tok5_bpe_encode", bpeEncode(_, _), bpeEncodeSql()),
+    Op("cont3_exact_ngram", exactNgramDecontam(_, _), exactNgramDecontamSql()),
+    Op("tok6_heaps_curve", heapsCurve _, heapsCurveSql),
+    Op("span2_boilerplate_frac", boilerplateFraction(_, _), boilerplateFractionSql()),
+    Op("zipf1_rank_slope", zipfSlope(_, _), zipfSlopeSql()),
+    Op("txt13_char_classes", docCharClasses _, docCharClassesSql),
+    Op("hist1_token_histogram", tokenHistogram(_, _), tokenHistogramSql()),
+    Op("red1_pii_scan", docPiiScan _, docPiiScanSql),
+    Op("srch1_bm25_topk", bm25TopDocs(_, _), bm25TopDocsSql()),
+    Op("srch3_qlm_topk", qlmTopDocs(_, _), qlmTopDocsSql()),
+    Op("lm3_kneser_ney", knBigramLm(_, _), knBigramLmSql()),
+    Op("srch2_hybrid_rrf", hybridRetrieval(_, _), hybridRetrievalSql()),
+    Op("cur1_curriculum_phases", curriculumPhases _, curriculumPhasesSql),
+    Op("qf3_perplexity_filter", perplexityFilter(_, _), perplexityFilterSql()),
+    Op("tok4_coverage_curve", coverageCurve(_, _), coverageCurveSql()),
+    Op("chunk1_doc_spans", docChunks(_, _), docChunksSql()),
+    Op("span1_repeated_ngrams", repeatedSpans(_, _), repeatedSpansSql()),
+    Op("mem1_memorization_risk", memorizationRisk(_, _), memorizationRiskSql()),
+    Op("rep1_corpus_report", corpusReport _, corpusReportSql),
+    Op("smp3_mixture_balance", mixtureBalance _, mixtureBalanceSql),
+    Op("tok1_vocab_coverage", vocabCoverage(_, _), vocabCoverageSql()),
+    Op("lm1_bigram_topk", bigramLm(_, _), bigramLmSql()),
+    Op("sel1_dsir_weights", dsirWeights _, dsirWeightsSql),
+    Op("txt11_unigram_logprob", docUnigramLogProb _, docUnigramLogProbSql),
+    Op("txt12_tfidf_terms", docTfidf(_, _), docTfidfSql()),
+    Op("txt9_repetition", docRepetition _, docRepetitionSql),
+    Op("txt10_vocab_richness", docVocabRichness _, docVocabRichnessSql),
+    Op("smp2_language_cap", languageCap(_, _), languageCapSql()),
+    Op("pack1_sequence_packing", sequencePacking(_, _), sequencePackingSql()),
+    Op("pack2_packing_waste", packingWaste(_, _), packingWasteSql()),
+    Op("cont1_benchmark_overlap", benchmarkContamination _, benchmarkContaminationSql),
+    Op("cont2_benchmark_leakage", benchmarkLeakage _, benchmarkLeakageSql),
+    Op("smp1_stratified_sample", stratifiedSample _, stratifiedSampleSql),
+    Op("txt1_token_stats", docTokenStats _, docTokenStatsSql),
+    Op("txt2_lang_id", docLangId _, docLangIdSql),
+    Op("txt3_fingerprint", docFingerprint _, docFingerprintSql),
+    Op("txt4_bpe_tokens", docBpeTokens _, docBpeTokensSql),
+    Op("txt5_rolling_hash", docRollingHash _, docRollingHashSql),
+    Op("txt6_quality_filter", docQualityFilter _, docQualityFilterSql),
+    Op("txt7_top_tokens", topTokens(_, _), topTokensSql()),
+    // DuckDB ships no deflate: ValuePinSpec pins txt8 to zlib reference values
+    Op.pinned("txt8_compression_ratio", compressionRatio _),
+    Op("mm1_payload_stats", mmPayloadStats _, mmPayloadStatsSql))
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -41,8 +40,6 @@ object Tpch {
   private def sqlDavg(e: String): String = Exact.sqlDavg(e)
 
   private def ts(d: String): Column = to_timestamp(lit(d))
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
 
   // bounded-result ordering shared across the operator families
   import Par.BoundedOrder
@@ -565,41 +562,22 @@ object Tpch {
        |                 WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '1999-01-01')
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> q1 _,
-    "q3_shipping_priority" -> q3 _,
-    "q4_order_priority" -> q4 _,
-    "q5_region_revenue" -> q5 _,
-    "q6_forecast_revenue" -> q6 _,
-    "q7_volume_shipping" -> q7 _,
-    "q9_product_profit" -> q9 _,
-    "q10_returned_items" -> q10 _,
-    "q13_cust_distribution" -> q13 _,
-    "q14_promo_effect" -> q14 _,
-    "q15_top_supplier" -> q15 _,
-    "q16_supplier_cnt" -> q16 _,
-    "q17_small_qty_revenue" -> q17 _,
-    "q18_large_orders" -> q18 _,
-    "q19_bracket_revenue" -> q19 _,
-    "q21_late_suppliers" -> q21 _,
-    "q22_idle_customers" -> q22 _)
-
-  val oracles: Map[String, String] = Map(
-    "q1_pricing_summary" -> q1Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q4_order_priority" -> q4Sql,
-    "q5_region_revenue" -> q5Sql,
-    "q6_forecast_revenue" -> q6Sql,
-    "q7_volume_shipping" -> q7Sql,
-    "q9_product_profit" -> q9Sql,
-    "q10_returned_items" -> q10Sql,
-    "q13_cust_distribution" -> q13Sql,
-    "q14_promo_effect" -> q14Sql,
-    "q15_top_supplier" -> q15Sql,
-    "q16_supplier_cnt" -> q16Sql,
-    "q17_small_qty_revenue" -> q17Sql,
-    "q18_large_orders" -> q18Sql,
-    "q19_bracket_revenue" -> q19Sql,
-    "q21_late_suppliers" -> q21Sql,
-    "q22_idle_customers" -> q22Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q1_pricing_summary", q1 _, q1Sql),
+    Op("q3_shipping_priority", q3 _, q3Sql),
+    Op("q4_order_priority", q4 _, q4Sql),
+    Op("q5_region_revenue", q5 _, q5Sql),
+    Op("q6_forecast_revenue", q6 _, q6Sql),
+    Op("q7_volume_shipping", q7 _, q7Sql),
+    Op("q9_product_profit", q9 _, q9Sql),
+    Op("q10_returned_items", q10 _, q10Sql),
+    Op("q13_cust_distribution", q13 _, q13Sql),
+    Op("q14_promo_effect", q14 _, q14Sql),
+    Op("q15_top_supplier", q15 _, q15Sql),
+    Op("q16_supplier_cnt", q16 _, q16Sql),
+    Op("q17_small_qty_revenue", q17 _, q17Sql),
+    Op("q18_large_orders", q18 _, q18Sql),
+    Op("q19_bracket_revenue", q19 _, q19Sql),
+    Op("q21_late_suppliers", q21 _, q21Sql),
+    Op("q22_idle_customers", q22 _, q22Sql))
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Engine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,8 +14,6 @@ import Par.BoundedOrder
   * swanlake-core/src/engine/mod.rs DML path) runs on top of its tables.
   */
 object Warehouse {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Engine.table(s, dir, n)
 
   // === scd1: type-2 slowly-changing-dimension history ======================
   /** SCD type-2 interval build from the event log: per user, collapse
@@ -765,31 +762,17 @@ object Warehouse {
        |FROM per_col ORDER BY column_name""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fd2_candidate_keys" -> candidateKeys _,
-    "scd1_type2_history" -> scd2History _,
-    "pit1_point_in_time" -> pointInTime _,
-    "ivm1_partial_merge" -> partialMerge _,
-    "prof3_value_histogram" -> histogramProfile _,
-    "zord2_prune_audit" -> zorderPruneAudit _,
-    "cmp1_encoding_advisor" -> encodingAdvisor _,
-    "fd1_functional_deps" -> functionalDeps _,
-    "fd4_approx_fd_g3" -> approxFdG3 _,
-    "zord1_zorder_stats" -> zorderStats _,
-    "ws1_weighted_sample" -> weightedSample _,
-    "mad1_robust_outliers" -> robustOutliers _)
-
-  val oracles: Map[String, String] = Map(
-    "fd2_candidate_keys" -> candidateKeysSql,
-    "scd1_type2_history" -> scd2HistorySql,
-    "pit1_point_in_time" -> pointInTimeSql,
-    "ivm1_partial_merge" -> partialMergeSql,
-    "prof3_value_histogram" -> histogramProfileSql,
-    "zord2_prune_audit" -> zorderPruneAuditSql,
-    "cmp1_encoding_advisor" -> encodingAdvisorSql,
-    "fd1_functional_deps" -> functionalDepsSql,
-    "fd4_approx_fd_g3" -> approxFdG3Sql,
-    "zord1_zorder_stats" -> zorderStatsSql,
-    "ws1_weighted_sample" -> weightedSampleSql,
-    "mad1_robust_outliers" -> robustOutliersSql)
+  val ops: Seq[Op] = Seq(
+    Op("fd2_candidate_keys", candidateKeys _, candidateKeysSql),
+    Op("scd1_type2_history", scd2History _, scd2HistorySql),
+    Op("pit1_point_in_time", pointInTime _, pointInTimeSql),
+    Op("ivm1_partial_merge", partialMerge _, partialMergeSql),
+    Op("prof3_value_histogram", histogramProfile _, histogramProfileSql),
+    Op("zord2_prune_audit", zorderPruneAudit _, zorderPruneAuditSql),
+    Op("cmp1_encoding_advisor", encodingAdvisor _, encodingAdvisorSql),
+    Op("fd1_functional_deps", functionalDeps _, functionalDepsSql),
+    Op("fd4_approx_fd_g3", approxFdG3 _, approxFdG3Sql),
+    Op("zord1_zorder_stats", zorderStats _, zorderStatsSql),
+    Op("ws1_weighted_sample", weightedSample _, weightedSampleSql),
+    Op("mad1_robust_outliers", robustOutliers _, robustOutliersSql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.types.TimestampType
 
 class EngineSpec extends SparkTestBase {
 
+  private lazy val session = new Session("engine-spec", spark)
+
   test("table reads every testdata table") {
     Engine.tableNames.foreach { n =>
       assert(Engine.table(spark, sfDir, n).count() > 0, s"table $n is empty")
@@ -17,9 +19,9 @@ class EngineSpec extends SparkTestBase {
     assert(minTs.toString.startsWith("2024-01-01"))
   }
 
-  test("Engine.sql executes multi-statement scripts, returning the last result") {
+  test("Session.sql executes multi-statement scripts, returning the last result") {
     Engine.registerAll(spark, sfDir)
-    val df = Engine.sql(spark,
+    val df = session.sql(
       "SELECT 1 AS one; SELECT count(*) AS n FROM region FOR UPDATE")
     assert(df.columns.toSeq == Seq("n"))
     assert(df.head.getLong(0) == 5)
@@ -27,10 +29,6 @@ class EngineSpec extends SparkTestBase {
 
   test("entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
-  }
-
-  test("every oracle key has a matching query") {
-    assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
   }
 
   test("SQL passthrough matches the DataFrame battery (the reference's usage mode)") {
@@ -41,22 +39,22 @@ class EngineSpec extends SparkTestBase {
     // Spark equivalents (HUGEINT ~ 128-bit exact int, VARCHAR unsized).
     def sparkDialect(sql: String): String =
       sql.replace("AS HUGEINT", "AS DECIMAL(38,0)").replace("AS VARCHAR", "AS STRING")
-    val viaSql = Engine.sql(spark, sparkDialect(operators.Tpch.q6Sql)).collect().toSeq
+    val viaSql = session.sql(sparkDialect(operators.Tpch.q6Sql)).collect().toSeq
     val viaDf = operators.Tpch.q6(spark, sfDir).collect().toSeq
     assert(viaSql.map(_.toString) == viaDf.map(_.toString))
-    val q1Sql = Engine.sql(spark, sparkDialect(operators.Tpch.q1Sql)).collect().toSeq
+    val q1Sql = session.sql(sparkDialect(operators.Tpch.q1Sql)).collect().toSeq
     val q1Df = operators.Tpch.q1(spark, sfDir).collect().toSeq
     assert(q1Sql.map(_.toString) == q1Df.map(_.toString))
   }
 
   test("PRAGMA database_list answers as SHOW CATALOGS (metadata.rs:36)") {
-    val rows = Engine.sql(spark, "PRAGMA database_list").collect()
+    val rows = session.sql("PRAGMA database_list").collect()
     assert(rows.map(_.getString(0)).contains("spark_catalog"))
   }
 
   test("SHOW ALL TABLES and DESCRIBE QUERY execute (ducklake_basic.test, A6)") {
-    assert(Engine.sql(spark, "SHOW ALL TABLES").columns.contains("tableName"))
-    val desc = Engine.sql(spark, "DESCRIBE QUERY SELECT 1 AS one, 'x' AS s").collect()
+    assert(session.sql("SHOW ALL TABLES").columns.contains("tableName"))
+    val desc = session.sql("DESCRIBE QUERY SELECT 1 AS one, 'x' AS s").collect()
     assert(desc.map(_.getString(0)).toSeq == Seq("one", "s"))
   }
 

@@ -50,11 +50,12 @@ class InfoSchemaSpec extends SparkTestBase {
     InfoSchema.register(spark) // snapshot BEFORE the create
     spark.sql("CREATE OR REPLACE TEMP VIEW fresh_ddl_probe AS SELECT 1 AS x")
     // no manual re-register: the SQL entry refreshes the views itself
-    val names = Engine.sql(spark,
+    val session = new Session("info-schema", spark)
+    val names = session.sql(
       "SELECT table_name FROM information_schema.tables").collect().map(_.getString(0))
     assert(names.contains("fresh_ddl_probe"), "new view must be visible without re-registration")
     spark.sql("DROP VIEW fresh_ddl_probe")
-    val after = Engine.sql(spark,
+    val after = session.sql(
       "SELECT table_name FROM information_schema.tables").collect().map(_.getString(0))
     assert(!after.contains("fresh_ddl_probe"), "dropped view must disappear")
   }

@@ -16,13 +16,14 @@ class ScenarioSpec extends SparkTestBase {
     StructField("balance", DoubleType)))
 
   // === execute_query_commands.rs: DDL/DML through the single SQL entry ====
-  test("DDL and DML flow through Engine.sql (execute_query_commands.rs)") {
-    Engine.sql(spark, "DROP TABLE IF EXISTS eqc_t")
-    Engine.sql(spark, "CREATE TABLE eqc_t (id INT, v STRING) USING parquet")
-    Engine.sql(spark, "INSERT INTO eqc_t VALUES (1, 'a'), (2, 'b')")
-    val rows = Engine.sql(spark, "SELECT * FROM eqc_t ORDER BY id").collect()
+  test("DDL and DML flow through Session.sql (execute_query_commands.rs)") {
+    val session = new Session("eqc", spark)
+    session.sql("DROP TABLE IF EXISTS eqc_t")
+    session.sql("CREATE TABLE eqc_t (id INT, v STRING) USING parquet")
+    session.sql("INSERT INTO eqc_t VALUES (1, 'a'), (2, 'b')")
+    val rows = session.sql("SELECT * FROM eqc_t ORDER BY id").collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2))
-    Engine.sql(spark, "DROP TABLE eqc_t")
+    session.sql("DROP TABLE eqc_t")
   }
 
   // === prepared_statements.rs:47-238: UPDATE/DELETE with parameters =======

@@ -52,6 +52,17 @@ class ServerSpec extends SparkTestBase {
     }
   }
 
+  test("init SQL wrapped in BEGIN; ...; COMMIT boots and takes effect") {
+    val cfg = ServerConfig.load(Map(
+      "SWANLAKE_DUCKDB_THREADS" -> "4",
+      "SWANLAKE_DUCKLAKE_INIT_SQL" ->
+        "BEGIN; CREATE OR REPLACE TEMP VIEW init_probe AS SELECT 42 AS answer; COMMIT"))
+    val shared = spark // created first, so the root session resolves to it
+    assert(cfg.newRootSession("graft-test") eq shared)
+    try assert(spark.table("init_probe").head.getInt(0) == 42)
+    finally spark.sql("DROP VIEW IF EXISTS init_probe")
+  }
+
   test("peer_ip keying and the catalog flow through the boot assembly") {
     val dir = java.nio.file.Files.createTempDirectory("graft_srv_lake")
     val catalog = new sources.MutableCatalog(spark, dir)
